@@ -18,7 +18,7 @@ real cluster `num_partitions` is 2-3x total executor cores; AQE coalesces.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 
 DEFAULT_MAX_TEXT_LEN = 1_000_000  # CompletePipelineReceiver.java default
 
@@ -30,18 +30,35 @@ def admit_turns(
 
     The 100-TB hot path: NO shuffle here — full text never moves. Duplicate
     (conv_id, turn_idx) rows survive admission and are resolved downstream
-    on *slim* rows (post-UDF summaries / exploded mentions) by the
-    deterministic rule winner = min(txt_h), applied identically in every
-    stage so conflicting duplicates resolve consistently. This replaces
-    assemble_turns' repartition+dropDuplicates, which shuffles the full
-    text column (~the whole corpus) just to dedup (J6,
-    DatabaseFacade.java:517-573)."""
+    on *slim* rows (the per-turn mention spans, the per-turn doc_meta
+    counts) by resolve_duplicates, so conflicting duplicates resolve the
+    same way in every output. This replaces assemble_turns'
+    repartition+dropDuplicates, which shuffles the full text column (~the
+    whole corpus) just to dedup (J6, DatabaseFacade.java:517-573)."""
     return (
         transcripts.filter(
             F.col("text").isNotNull() & (F.length("text") <= F.lit(max_text_len))
         )
         .withColumn("ts_day", F.to_date("ts"))
         .withColumn("txt_h", F.xxhash64("text"))
+    )
+
+
+def resolve_duplicates(turns: DataFrame) -> DataFrame:
+    """The duplicate-turn rule: one row per (conv_id, turn_idx), the one
+    with the smallest txt_h — deterministic and independent of row order
+    and parallelism. Drops txt_h, so a second call is a no-op; without
+    txt_h (assemble_turns output, already unique) it does nothing.
+
+    Project to slim columns first: the window shuffles every column it
+    is given."""
+    if "txt_h" not in turns.columns:
+        return turns
+    w = Window.partitionBy("conv_id", "turn_idx").orderBy("txt_h")
+    return (
+        turns.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "txt_h")
     )
 
 
@@ -126,8 +143,6 @@ def sft_pairs(transcripts: DataFrame) -> DataFrame:
     not an assistant turn (tool call, consecutive user turns) are
     dropped — the standard strict-alternation filter.
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     return (
         transcripts.select(
@@ -161,8 +176,6 @@ def tool_transitions(transcripts: DataFrame) -> DataFrame:
     excluded from both ends of the bigram — the matrix is over tool
     invocations only. Returns (tool, next_tool, n, row_total, p).
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     bigrams = (
         transcripts.select(
@@ -205,8 +218,6 @@ def nsp_pairs(transcripts: DataFrame) -> DataFrame:
     shuffle join on the picked rank. Returns
     (conv_id, turn_idx, sent_a, sent_b, label).
     """
-    from pyspark.sql import Window
-
     from kgx.dedup import md5_hash60
 
     w = Window.partitionBy("conv_id").orderBy("turn_idx")

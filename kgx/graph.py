@@ -962,7 +962,12 @@ def ktruss(edges_uv: DataFrame, k: int, rounds: int = 2) -> DataFrame:
     lineage-truncation contract shared with canonical.connected_components;
     per-round oriented frames ride on ``result._kgx_persisted`` for the
     caller to unpersist after consuming.
+
+    Raises ValueError for k < 3: below that an edge in zero triangles
+    should survive, but it never reaches the support table.
     """
+    if k < 3:
+        raise ValueError(f"ktruss needs k >= 3, got {k}")
     cur = edges_uv.select("u", "v")
     persisted = []
     last_sup = None

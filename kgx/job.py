@@ -76,10 +76,7 @@ def run_pipeline(
     )
     if not (resume and extract_ok):
         with lineage.StageTimer() as t:
-            # map-only admission (no full-text shuffle); duplicate
-            # (conv_id, turn_idx) rows are resolved downstream on slim rows
-            # with the deterministic min-txt_h winner rule — see
-            # assemble.admit_turns. Scan split planning
+            # map-only admission (no full-text shuffle). Scan split planning
             # (spark.sql.files.maxPartitionBytes) controls parallelism; set
             # num_partitions only to fan out a pathological file layout —
             # it costs one full shuffle of the raw rows.
@@ -87,41 +84,40 @@ def run_pipeline(
             if num_partitions:
                 turns = turns.repartition(num_partitions)
             turns = turns.persist()
-            # hot path: slim summary UDF; evidence path: full-span UDF —
-            # two regex passes, but neither drags the other's payload
-            # through its shuffle/cache
-            facts, turn_feats = relations.extract_facts(turns, kb)
-            with_mentions = mentions_mod.detect_mentions(turns, kb)
+            # one Arrow pass: the span UDF runs once per admitted turn, and
+            # its slim output — duplicate (conv_id, turn_idx) rows already
+            # resolved — is persisted and feeds every output below
+            spans = mentions_mod.resolved_mentions(
+                mentions_mod.detect_mentions(turns, kb)
+            ).persist()
+            facts, turn_feats = relations.sentence_facts(spans, kb)
             facts.write.mode("overwrite").partitionBy("ts_day").parquet(paths["facts"])
             turn_feats.select(
                 "conv_id", "turn_idx", "ts_day", "pos_cnt", "neg_cnt", "has_so"
             ).write.mode("overwrite").partitionBy("ts_day").parquet(paths["turn_feats"])
-            ev = materialize.mention_evidence(with_mentions)
-            materialize.write_mentions(ev, paths["mentions"])
+            materialize.write_mentions(
+                materialize.mention_evidence(spans), paths["mentions"]
+            )
             # SENTIMENT_PHRASE_RELATION analogue: fact ↔ evidence edges
-            pe = materialize.phrase_fact_edges(facts, with_mentions, kb)
+            pe = materialize.phrase_fact_edges(facts, spans, kb)
             pe.write.mode("overwrite").partitionBy("ts_day").parquet(
                 paths["phrase_edges"]
             )
-            for cached in getattr(pe, "_kgx_persisted", []):
-                cached.unpersist()
             # DOCUMENT_META_DATA provenance rows
             materialize.document_meta(turns).write.mode("overwrite").parquet(
                 paths["doc_meta"]
             )
             # coref-lite entity continuity (active SO set per turn, carried
-            # across silent turns) — reuses the evidence path's mention
-            # frame, so no extra Arrow pass; one narrow conv_id window
-            so = with_mentions.select(
+            # across silent turns); one narrow conv_id window
+            so = spans.select(
                 "conv_id", "turn_idx", mentions_mod.so_set_col().alias("so_set")
             )
             mentions_mod.carryover_from_so(so).write.mode("overwrite").parquet(
                 paths["carryover"]
             )
-            # release everything this stage pinned: the raw admitted turns
-            # and the slim intermediates persisted inside extract_facts
-            turns.unpersist()
-            for cached in getattr(facts, "_kgx_persisted", []):
+            # release everything this stage pinned: the admitted turns, the
+            # span frame and the slim intermediates of the facts and edges
+            for cached in [turns, spans, *facts._kgx_persisted, *pe._kgx_persisted]:
                 cached.unpersist()
         lineage.mark_stage_ok(paths["facts"], {"run_id": run_id})
         lineage.mark_stage_ok(paths["turn_feats"], {"run_id": run_id})

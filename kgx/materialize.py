@@ -18,6 +18,8 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from kgx import assemble, mentions
+
 
 def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
     triples.write.mode(mode).partitionBy("ts_day").parquet(path)
@@ -197,14 +199,16 @@ def mention_evidence(turns_with_mentions: DataFrame) -> DataFrame:
         sentiment-object begin in the turn (DISTANCE_TO_SENTIMENT_OBJECT,
         db_schema.sql:369); null when the turn has no SO mention.
 
-    Both are within-row array expressions over the mentions column — no
-    extra shuffle."""
+    Both are within-row array expressions over the mentions column; the
+    only shuffle is mentions.resolved_mentions' duplicate-turn window,
+    when the input still carries txt_h."""
     kind_to_phrase = F.create_map(
         F.lit("SO"), F.lit("sentimentObjectPhrase"),
         F.lit("OrientationTerm"), F.lit("orientationPhrase"),
         F.lit("Indicator"), F.lit("indicatorPhrase"),
         F.lit("Feature"), F.lit("featurePhrase"),
     )
+    turns_with_mentions = mentions.resolved_mentions(turns_with_mentions)
     m = F.col("mentions")
     pos_cnt = F.size(F.filter(m, lambda x: x["polarity"] == "positive"))
     neg_cnt = F.size(F.filter(m, lambda x: x["polarity"] == "negative"))
@@ -212,16 +216,16 @@ def mention_evidence(turns_with_mentions: DataFrame) -> DataFrame:
     so_begins = F.transform(
         F.filter(m, lambda x: x["kind"] == "SO"), lambda x: x["begin"]
     )
-    cols = ["conv_id", "turn_idx", "ts_day"] + (
-        ["txt_h"] if "txt_h" in turns_with_mentions.columns else []
-    )
-    ev = turns_with_mentions.select(
-        *cols,
+    return turns_with_mentions.select(
+        "conv_id",
+        "turn_idx",
+        "ts_day",
         turn_score.alias("_tscore"),
         so_begins.alias("_sob"),
         F.explode("mentions").alias("m"),
     ).select(
-        *cols,
+        "conv_id",
+        "turn_idx",
         F.col("m.begin").alias("begin"),
         F.col("m.end").alias("end"),
         F.col("m.surface").alias("text"),
@@ -241,24 +245,7 @@ def mention_evidence(turns_with_mentions: DataFrame) -> DataFrame:
         )
         .cast("int")
         .alias("dist_to_so"),
-    )
-    if "txt_h" in ev.columns:
-        # late-dedup rule on slim exploded rows: keep only mentions from the
-        # winning (min txt_h) text per (conv_id, turn_idx) — the same rule
-        # facts_from_turn_features applies — then collapse exact-duplicate
-        # rows (identical dup texts hash equal and yield identical spans)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("conv_id", "turn_idx")
-        ev = (
-            ev.withColumn("_min_h", F.min("txt_h").over(w))
-            .filter(F.col("txt_h") == F.col("_min_h"))
-            .drop("txt_h", "_min_h")
-            .dropDuplicates(["conv_id", "turn_idx", "begin", "end", "phrase_type"])
-        )
-    return ev.select(
-        "conv_id", "turn_idx", "begin", "end", "text", "phrase_type",
-        "sentiment_score_i", "dist_to_so", "ts_day",
+        "ts_day",
     )
 
 
@@ -299,7 +286,7 @@ def phrase_fact_edges(facts: DataFrame, turns_with_mentions: DataFrame, kb) -> D
     # ArrowEvalPython nodes in the finalized plan; with the cache, 1).
     # RELEASE OBLIGATION: the returned frame carries the cache in
     # _kgx_persisted — callers done with the edges should unpersist those.
-    ev = turns_with_mentions.select(
+    ev = mentions.resolved_mentions(turns_with_mentions).select(
         "conv_id", "turn_idx", F.explode("mentions").alias("m")
     ).select(
         "conv_id",
@@ -390,8 +377,7 @@ def document_meta(turns: DataFrame) -> DataFrame:
     )
     # counts become SLIM columns map-side — the text itself never enters
     # the shuffle; duplicate (conv_id, turn_idx) rows from the map-only
-    # admission path resolve on the slim rows with the same deterministic
-    # min-txt_h winner rule every other stage applies
+    # admission path resolve on the slim rows (assemble.resolve_duplicates)
     per_turn = turns.select(
         *slim_cols,
         F.size(F.split("text", " ")).alias("w"),
@@ -399,16 +385,7 @@ def document_meta(turns: DataFrame) -> DataFrame:
         F.col("ts"),
         src.alias("source"),
     )
-    if "txt_h" in per_turn.columns:
-        from pyspark.sql import Window
-
-        win = Window.partitionBy("conv_id", "turn_idx").orderBy("txt_h")
-        per_turn = (
-            per_turn.withColumn("_rn", F.row_number().over(win))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "txt_h")
-        )
-    return per_turn.groupBy("conv_id").agg(
+    return assemble.resolve_duplicates(per_turn).groupBy("conv_id").agg(
         F.sum("w").cast("bigint").alias("n_words"),
         F.sum("c").cast("bigint").alias("n_chars"),
         F.count(F.lit(1)).alias("n_turns"),

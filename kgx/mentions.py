@@ -6,13 +6,18 @@ GlobalParameters.java:53-69) and its annotation-set selects
 (doc.getAnnotations("Sentiment_Object"/"OrientationTerm"/"Indicator"),
 SentimentClassification.java:150,380,429,473,500).
 
-Contract (the ONLY Python stage in the hot path — Arrow-batched, never
-per-row):
+Contract (the ONLY Python stage in the hot path — one Arrow-batched UDF,
+never per-row):
 
     detect_mentions(text: Series[str]) -> Series[array<struct<
         begin:int, end:int, kind:string, surface:string,
         polarity:string>>]   (schema.MENTION; polarity set on
         OrientationTerm rows only, null otherwise)
+
+Every per-turn output is derived from that one span array with JVM array
+expressions: the turn summary (relations.turn_features), the phrase
+evidence, the fact↔phrase edges and the SO sets of the carryover — one
+annotation set per document, as in the reference.
 
 Matching semantics (shared with the pure-Python oracle in tests/oracle.py):
   * gazetteer / indicator / feature surfaces: leftmost-longest,
@@ -37,9 +42,9 @@ from typing import Iterable
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 
-from kgx import schema
+from kgx import assemble, schema
 from kgx.resources import KnowledgeBase
 
 
@@ -216,56 +221,6 @@ class SurfaceMatcher:
             return []
         return [(m.start(1), m.end(1)) for m in self.term_re.finditer(text)]
 
-    def summarize(self, text: str) -> tuple:
-        """One-pass per-turn summary: (pos_cnt, neg_cnt, first_feature,
-        first_subfeature, so_surfaces, ind_surfaces) — the 6 fields of
-        TURN_SUMMARY. This is the hot-path contract — only
-        counts and deduped surface lists cross the Arrow boundary, not
-        per-occurrence mention structs (~5x less transfer at 10^12 turns).
-        Semantics identical to match(): finditer order = offset order, so
-        first_feature is the first by begin; so/ind lists are distinct raw
-        surfaces in first-occurrence order; pos/neg count multiplicity."""
-        pos = neg = 0
-        first_feat = None
-        first_subfeat = None  # second distinct feature by offset — the
-        # SubFeature annotation reference (SentimentClassification.java:349,
-        # stored as the SENTIMENT subfeature FK, db_schema.sql:443)
-        so: list[str] = []
-        ind: list[str] = []
-        spans: list[tuple[int, int]] = []
-        for b, e in self._entity_spans(text):
-            s = text[b:e]
-            # .get, not []: re.IGNORECASE / casefolded-AC can match Unicode
-            # case variants whose str.lower() is NOT the pattern key
-            # ('\u017ftark' matches 'stark'; final-sigma '\u0391\u03a3'
-            # lowers to '\u03b1\u03c2') — a [] lookup would KeyError and
-            # kill the whole task instead of skipping the stray match
-            k = self.kind_of.get(s.lower())
-            if k is None:
-                continue
-            spans.append((b, e))
-            if k == "SO":
-                if s not in so:
-                    so.append(s)
-            elif k == "Indicator":
-                if s not in ind:
-                    ind.append(s)
-            elif first_feat is None:
-                first_feat = s
-            elif first_subfeat is None and s.lower() != first_feat.lower():
-                first_subfeat = s
-        for b, e in self._term_spans(text):
-            if spans and any(b < se and sb < e for sb, se in spans):
-                continue
-            pol = self.polarity_of.get(text[b:e].lower())
-            if pol is None:  # Unicode case-variant match (see above)
-                continue
-            if pol == "positive":
-                pos += 1
-            else:
-                neg += 1
-        return (pos, neg, first_feat, first_subfeat, so, ind)
-
     def match(self, text: str) -> list[tuple]:
         """Mentions as (begin, end, kind, surface, polarity) tuples —
         tuples, not dicts: this runs per turn at 10^12 scale and Arrow
@@ -274,8 +229,13 @@ class SurfaceMatcher:
         spans: list[tuple[int, int]] = []
         for b, e in self._entity_spans(text):
             surface = text[b:e]
+            # .get, not []: re.IGNORECASE / casefolded-AC can match Unicode
+            # case variants whose str.lower() is NOT the pattern key
+            # ('\u017ftark' matches 'stark'; final-sigma '\u0391\u03a3'
+            # lowers to '\u03b1\u03c2') — a [] lookup would KeyError and
+            # kill the whole task instead of skipping the stray match
             kind = self.kind_of.get(surface.lower())
-            if kind is None:  # Unicode case-variant match (see summarize)
+            if kind is None:
                 continue
             spans.append((b, e))
             out.append((b, e, kind, surface, None))
@@ -284,7 +244,7 @@ class SurfaceMatcher:
                 continue  # inside an entity/indicator/feature span
             surface = text[b:e]
             pol = self.polarity_of.get(surface.lower())
-            if pol is None:
+            if pol is None:  # Unicode case-variant match (see above)
                 continue
             out.append((b, e, "OrientationTerm", surface, pol))
         out.sort(key=lambda t: (t[0], -t[1]))
@@ -308,31 +268,6 @@ def matcher_from_kb(kb: KnowledgeBase) -> SurfaceMatcher:
     return SurfaceMatcher(**_kb_fields(kb))
 
 
-from pyspark.sql.types import (  # noqa: E402
-    ArrayType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-TURN_SUMMARY = StructType(
-    [
-        StructField("pos_cnt", IntegerType(), False),
-        StructField("neg_cnt", IntegerType(), False),
-        StructField("feature_surface", StringType(), True),
-        StructField("subfeature_surface", StringType(), True),
-        StructField("so_mentions", ArrayType(StringType()), False),
-        StructField("ind_mentions", ArrayType(StringType()), False),
-    ]
-)
-
-
-def _broadcast_kb(turns: DataFrame, kb: KnowledgeBase):
-    sc = turns.sparkSession.sparkContext
-    return sc.broadcast(_kb_fields(kb))
-
-
 # Worker-process matcher cache, keyed by the broadcast's backing file path
 # (unique per broadcast variable, stable across tasks). A closure-captured
 # dict does NOT survive tasks — PySpark re-pickles the closure into every
@@ -354,9 +289,9 @@ def _matcher_from_bc(kb_bc) -> SurfaceMatcher:
 
 
 def detect_mentions(turns: DataFrame, kb: KnowledgeBase) -> DataFrame:
-    """Append a `mentions` array column (full standoff spans — the evidence
-    path; the analytics hot path uses extract_turn_features). No shuffle."""
-    kb_bc = _broadcast_kb(turns, kb)
+    """Append a `mentions` array column (full standoff spans, sorted by
+    begin). No shuffle."""
+    kb_bc = turns.sparkSession.sparkContext.broadcast(_kb_fields(kb))
 
     @F.pandas_udf(schema.MENTIONS_COL)
     def _detect(text: pd.Series) -> pd.Series:
@@ -370,7 +305,18 @@ def detect_mentions(turns: DataFrame, kb: KnowledgeBase) -> DataFrame:
     return turns.withColumn("mentions", _detect(F.col("text")))
 
 
-def so_set_col(mentions_col: Column = None) -> Column:
+def resolved_mentions(turns_with_mentions: DataFrame) -> DataFrame:
+    """The slim per-turn span frame (conv_id, turn_idx, ts_day, mentions):
+    text dropped, then duplicate turns resolved by
+    assemble.resolve_duplicates — the one frame every extract output is
+    derived from, so facts and evidence come from the same winner text."""
+    cols = ["conv_id", "turn_idx", "ts_day", "mentions"]
+    if "txt_h" in turns_with_mentions.columns:
+        cols.append("txt_h")
+    return assemble.resolve_duplicates(turns_with_mentions.select(*cols))
+
+
+def so_set_col(mentions_col: Column | None = None) -> Column:
     """Sorted distinct lowercase SO surfaces from a `mentions` array column
     (in-row; no shuffle)."""
     m = mentions_col if mentions_col is not None else F.col("mentions")
@@ -445,42 +391,12 @@ def carryover_from_so(so: DataFrame) -> DataFrame:
 
 
 def extract_turn_features(turns: DataFrame, kb: KnowledgeBase) -> DataFrame:
-    """Hot-path UDF: per-turn summary struct (counts + deduped surfaces),
-    flattened to the slim turn_feats layout consumed by relations/aggregate.
-    One Arrow round-trip, no per-occurrence structs, no downstream array
-    lambdas."""
-    kb_bc = _broadcast_kb(turns, kb)
+    """Per-turn summary (counts + deduped surfaces) in the slim turn_feats
+    layout consumed by relations/aggregate: detect_mentions, then
+    relations.turn_features, which resolves duplicate turns."""
+    from kgx import relations
 
-    @F.pandas_udf(TURN_SUMMARY)
-    def _summ(text: pd.Series) -> pd.DataFrame:
-        matcher = _matcher_from_bc(kb_bc)
-        summarize = matcher.summarize
-        rows = [
-            summarize(t) if isinstance(t, str) else (0, 0, None, None, [], [])
-            for t in text.to_numpy()
-        ]
-        return pd.DataFrame(
-            rows,
-            columns=["pos_cnt", "neg_cnt", "feature_surface",
-                     "subfeature_surface", "so_mentions", "ind_mentions"],
-            index=text.index,
-        )
-
-    passthrough = ["conv_id", "turn_idx", "ts_day"] + (
-        ["txt_h"] if "txt_h" in turns.columns else []
-    )
-    out = turns.select(*passthrough, _summ(F.col("text")).alias("s"))
-    return out.select(
-        *passthrough,
-        F.col("s.pos_cnt").alias("pos_cnt"),
-        F.col("s.neg_cnt").alias("neg_cnt"),
-        F.signum(F.col("s.pos_cnt") - F.col("s.neg_cnt")).cast("int").alias("turn_score"),
-        F.col("s.feature_surface").alias("feature_surface"),
-        F.col("s.subfeature_surface").alias("subfeature_surface"),
-        F.col("s.so_mentions").alias("so_mentions"),
-        F.col("s.ind_mentions").alias("ind_mentions"),
-        (F.size("s.so_mentions") > 0).alias("has_so"),
-    )
+    return relations.turn_features(detect_mentions(turns, kb))
 
 
 def mention_contexts(

@@ -31,9 +31,9 @@ the same conv_id-partitioned parent (exchange reuse).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
-from kgx import linking
+from kgx import linking, mentions
 from kgx.resources import KnowledgeBase
 
 _NS = "http://kgx.example.org/onto#"
@@ -41,12 +41,15 @@ _NS = "http://kgx.example.org/onto#"
 
 def turn_features(turns_with_mentions: DataFrame) -> DataFrame:
     """Per-turn scalar columns derived from the mentions array —
-    whole-stage-codegen array expressions, zero shuffle.
+    whole-stage-codegen array expressions; the only shuffle is the
+    duplicate-turn window of mentions.resolved_mentions, and only when
+    the input still carries txt_h.
 
     Projects AWAY text/mentions/role/tool: this DataFrame is the fan-out
     point for direct/indirect/fallback branches and is persisted by
     sentence_facts, so the cached rows must be slim (the raw text and full
     annotation array would otherwise dominate cache size and shuffle)."""
+    turns_with_mentions = mentions.resolved_mentions(turns_with_mentions)
     m = F.col("mentions")
     is_pos = lambda x: x["polarity"] == "positive"  # noqa: E731
     is_neg = lambda x: x["polarity"] == "negative"  # noqa: E731
@@ -216,18 +219,6 @@ def facts_from_turn_features(
     alias = linking.feature_alias_dim(spark, kb)
     ind = linking.indicators_dim(spark, kb)
 
-    if "txt_h" in tf.columns:
-        # late dedup on SLIM rows (admit_turns path): winner per
-        # (conv_id, turn_idx) = min txt_h — deterministic, order- and
-        # parallelism-independent, and the same rule every stage applies,
-        # so conflicting duplicates resolve consistently across facts and
-        # evidence outputs. The shuffle moves summary structs, not text.
-        w = Window.partitionBy("conv_id", "turn_idx").orderBy("txt_h")
-        tf = (
-            tf.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "txt_h")
-        )
     if persist:
         tf = tf.persist()
     linked = linked_turn_entities(tf, gaz)
@@ -246,13 +237,9 @@ def facts_from_turn_features(
 def extract_facts(
     turns: DataFrame, kb: KnowledgeBase, persist: bool = True
 ) -> tuple[DataFrame, DataFrame]:
-    """Hot path: assemble-output turns → slim turn summary (one Arrow
-    round-trip) → facts. Use this in jobs/benchmarks; use sentence_facts
-    when you already materialized the full mention spans."""
-    from kgx import mentions as mentions_mod
-
-    tf = mentions_mod.extract_turn_features(turns, kb)
-    return facts_from_turn_features(tf, kb, persist=persist)
+    """Assemble-output turns → facts, for callers that do not keep the
+    mention spans; use sentence_facts when you already have them."""
+    return sentence_facts(mentions.detect_mentions(turns, kb), kb, persist=persist)
 
 
 def sentence_facts(

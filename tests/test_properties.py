@@ -179,6 +179,58 @@ def test_mention_evidence_dedup_consistent_with_facts(spark):
         assert wt[r["begin"]:r["end"]].lower() == r["text"].lower()
 
 
+def test_job_outputs_follow_duplicate_turn_winner(spark, tmp_path):
+    """run_pipeline resolves a conflicting duplicate turn once, so every
+    extract output comes from the min-txt_h winner text: no loser span
+    reaches phrase_edges and no loser entity reaches carryover."""
+    import datetime
+
+    winner, loser = "Globex outlook loss", "Initech price surge"
+    texts = [
+        (0, "Acme profit record"),
+        (1, winner),
+        (1, loser),
+        (2, "it looks weak"),
+        (3, "Hooli growth"),
+    ]
+    ts = datetime.datetime(2025, 3, 1, 12, 0)
+    tr = spark.createDataFrame(
+        [("c0", i, "user", t, None, ts) for i, t in texts],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    hashes = {
+        r["text"]: r["h"] for r in tr.select("text", F.xxhash64("text").alias("h")).collect()
+    }
+    assert hashes[winner] < hashes[loser]  # premise: the winner is min txt_h
+    kept = {i: t for i, t in texts if t != loser}
+
+    paths = job.run_pipeline(spark, tr, str(tmp_path / "kg"))
+
+    def rows(name):
+        return spark.read.parquet(paths[name]).collect()
+
+    facts = rows("facts")
+    assert {r["entity_name"] for r in facts if r["turn_idx"] == 1} == {"Globex"}
+    assert all("Initech" not in (r["entity_name"] or "") for r in facts)
+
+    for r in rows("mentions"):
+        assert kept[r["turn_idx"]][r["begin"]:r["end"]] == r["text"]
+    turn1 = {(r["begin"], r["end"]) for r in rows("mentions") if r["turn_idx"] == 1}
+    assert turn1 == {(0, 6), (7, 14), (15, 19)}
+
+    edges = {(r["role"], r["begin"], r["end"]) for r in rows("phrase_edges") if r["turn_idx"] == 1}
+    assert ("orientation", 15, 19) in edges
+    assert {(b, e) for _role, b, e in edges} <= turn1
+
+    carry = {(r["turn_idx"], r["entity"]) for r in rows("carryover")}
+    assert carry == {(0, "acme"), (1, "globex"), (2, "globex"), (3, "hooli")}
+
+    (meta,) = rows("doc_meta")
+    assert meta["n_turns"] == 4
+    assert meta["n_chars"] == sum(len(t) for t in kept.values())
+    assert meta["n_words"] == sum(len(t.split(" ")) for t in kept.values())
+
+
 def test_salted_rollup_matches_unsalted(spark):
     """--salt path: two-phase salted document rollup produces identical
     triples to the direct groupBy (same totals, same first-wins subject)."""

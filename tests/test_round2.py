@@ -369,7 +369,6 @@ def test_aho_corasick_matches_regex_engine():
     ]
     for t in texts:
         assert rx.match(t) == ac.match(t), t
-        assert rx.summarize(t) == ac.summarize(t), t
 
 
 def test_aho_corasick_equivalence_property():
@@ -394,7 +393,6 @@ def test_aho_corasick_equivalence_property():
         rx = mentions.SurfaceMatcher(pats, [], [], terms, [], engine="regex")
         ac = mentions.SurfaceMatcher(pats, [], [], terms, [], engine="aho")
         assert rx.match(text) == ac.match(text)
-        assert rx.summarize(text) == ac.summarize(text)
 
     check()
 

@@ -464,15 +464,18 @@ def test_matcher_survives_unicode_case_variants():
         pos_terms=["gain"],
         neg_terms=["loss"],
     )
-    # long-s variant matches the regex for 'stark' but must be skipped
-    pos, neg, feat, subfeat, so, ind = m.summarize("ſtark had a gain")
-    assert feat is None and so == [] and ind == []
-    assert (pos, neg) == (1, 0)
+    # long-s variant matches the regex for 'stark' but must be skipped;
+    # the orientation term after it still counts
+    assert m.match("ſtark had a gain") == [(12, 16, "OrientationTerm", "gain", "positive")]
     # final-sigma variant of the indicator must be skipped, not crash
     out = m.match("ΑΣ rose; loss for ſtark")
     kinds = {k for (_b, _e, k, _s, _p) in out}
     assert "Indicator" not in kinds
     assert ("OrientationTerm" in kinds)  # 'loss' still matched
-    # exact-case behavior unchanged
-    pos2, neg2, feat2, _sf, so2, _i = m.summarize("Stark Industries gain for stark")
-    assert so2 == ["Stark Industries"] and feat2 == "stark" and pos2 == 1
+    # exact-case behavior unchanged: SO keeps its raw surface, the
+    # lowercase feature still matches
+    assert m.match("Stark Industries gain for stark") == [
+        (0, 16, "SO", "Stark Industries", None),
+        (17, 21, "OrientationTerm", "gain", "positive"),
+        (26, 31, "Feature", "stark", None),
+    ]

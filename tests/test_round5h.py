@@ -48,6 +48,17 @@ def test_ktruss_k3_keeps_all_triangle_edges(spark):
     assert all(s == 1 for s in rows.values())
 
 
+def test_ktruss_rejects_k_below_three(spark):
+    # at k <= 2 the triangle-free edge c-d must survive, but peeling only
+    # keeps edges found in the support table, so the call is refused
+    import pytest
+
+    tri = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")]
+    for k in (0, 1, 2):
+        with pytest.raises(ValueError, match="k >= 3"):
+            graph.ktruss(_edges(spark, tri), k=k)
+
+
 def test_ktruss_cascade_needs_second_round(spark):
     # chain of triangles: t1 = a-b-c, t2 = b-c-d, t3 = c-d-e. Edge c-d sits
     # in t2+t3 (support 2), b-c in t1+t2 (2), others support 1. k=4 round 1

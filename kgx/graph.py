@@ -1034,13 +1034,16 @@ def harmonic_closeness(
     max_depth: int = 3,
 ) -> DataFrame:
     """Landmark-approximated harmonic closeness centrality (Boldi &
-    Vigna 2014, "Axioms for centrality"): for every node, sum 1/d over
-    its distances d to the `n_landmarks` highest-degree pivots (the
-    landmark_distances table), the bounded-depth estimator of the exact
-    harmonic centrality Σ_u 1/d(u, v) that a full APSP could never
-    compute at 10^9 edges. Unreached (landmark, node) pairs contribute 0
-    exactly as the full definition prescribes — no infinite-distance
-    special case.
+    Vigna 2014, "Axioms for centrality"): for every node that some
+    landmark reaches within `max_depth` hops, sum 1/d over its distances
+    d to the `n_landmarks` highest-degree pivots (the landmark_distances
+    table), the bounded-depth estimator of the exact harmonic centrality
+    Σ_u 1/d(u, v) that a full APSP could never compute at 10^9 edges.
+    Unreached (landmark, node) pairs contribute 0 exactly as the full
+    definition prescribes — no infinite-distance special case. A node
+    that no landmark reaches within `max_depth` (a landmark's distance 0
+    to itself does not count) gets no row at all, not a row with
+    harmonic 0.
 
     Engine-exact arithmetic: each distance contributes the exact integer
     10^12 // d (d >= 1; the landmark's own dist-0 row is excluded), the

@@ -4,18 +4,24 @@
         --input /data/transcripts --out /data/kg \
         --shuffle-partitions 2048 --salt 16
 
-Stage graph (each stage checkpoints to parquet/Iceberg and records lineage,
-so a killed run resumes at the first incomplete stage — SURVEY.md §3 tail):
+Stage graph, declared once in the `STAGES` table (stage → the outputs it
+writes). One runner drives every stage: it skips a stage whose outputs all
+carry a `_KGX_STAGE_OK` marker, else runs it, appends its lineage rows in
+one write and marks its outputs, so a killed run resumes at the first
+incomplete stage (SURVEY.md §3 tail):
 
     assemble → extract (mentions+relations → facts/turn_feats/mentions/
-    phrase_edges/carryover) → triples (+ indicator_nodes) → nodes →
-    analytics (entity_degrees + corpus_meta read-side rollups)
+    phrase_edges/doc_meta/carryover) → triples (+ indicator_nodes,
+    results) → nodes → analytics (entity_degrees, corpus_meta and the
+    url/query-parameter/node-property dims)
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import time
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +39,24 @@ from kgx import (
 )
 
 
+# The stage graph, in run order: each stage names the output dirs it
+# writes, once. `run_pipeline`'s paths, its resume check, its
+# `_KGX_STAGE_OK` markers and its lineage rows all derive from this table.
+STAGES: dict[str, tuple[str, ...]] = {
+    "extract": (
+        "facts", "turn_feats", "mentions", "phrase_edges", "doc_meta", "carryover",
+    ),
+    "triples": ("triples", "indicator_nodes", "results"),
+    "nodes": ("nodes",),
+    "analytics": (
+        "entity_degrees", "corpus_meta", "url_dim", "query_params", "node_props",
+    ),
+}
+# the output whose per-partition row counts a stage's lineage records (its
+# summary rows_out is their sum); analytics writes only small rollups
+COUNTED = {"extract": "facts", "triples": "triples", "nodes": "nodes"}
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -44,104 +68,88 @@ def run_pipeline(
     run_id: str | None = None,
     salt_buckets: int | None = None,
 ) -> dict[str, str]:
-    """Run all stages; returns {stage: output_path}. Idempotent + resumable."""
+    """Run all stages; returns {output: path}. Idempotent + resumable: a
+    stage reruns whole unless every one of its outputs carries a marker."""
     kb = kb or resources.default_kb()
     run_id = run_id or lineage.new_run_id()
-    lin_dir = os.path.join(out_dir, "lineage")
-    paths = {
-        "facts": os.path.join(out_dir, "facts"),
-        "turn_feats": os.path.join(out_dir, "turn_feats"),
-        "triples": os.path.join(out_dir, "triples"),
-        "nodes": os.path.join(out_dir, "nodes"),
-        "mentions": os.path.join(out_dir, "mentions"),
-        "phrase_edges": os.path.join(out_dir, "phrase_edges"),
-        "indicator_nodes": os.path.join(out_dir, "indicator_nodes"),
-        "doc_meta": os.path.join(out_dir, "doc_meta"),
-        "results": os.path.join(out_dir, "results"),
-        "entity_degrees": os.path.join(out_dir, "entity_degrees"),
-        "corpus_meta": os.path.join(out_dir, "corpus_meta"),
-        "url_dim": os.path.join(out_dir, "url_dim"),
-        "query_params": os.path.join(out_dir, "query_params"),
-        "node_props": os.path.join(out_dir, "node_props"),
-        "carryover": os.path.join(out_dir, "carryover"),
+    paths = {o: os.path.join(out_dir, o) for outs in STAGES.values() for o in outs}
+    todo = {
+        stage
+        for stage, outs in STAGES.items()
+        if not (resume and all(lineage.stage_output_ok(paths[o]) for o in outs))
     }
 
-    # -- stage: extract (assemble + mentions + relations), one Spark job ---
-    extract_ok = all(
-        lineage.stage_output_ok(paths[p])
-        for p in (
-            "facts", "turn_feats", "mentions", "phrase_edges", "doc_meta",
-            "carryover",
+    def run(stage: str, write: Callable[[], None], **meta) -> None:
+        """Run a stage's writes unless resume finds it done, then append
+        its lineage in one write, then mark its outputs: a stage marked
+        done always has its lineage rows, wherever a kill lands."""
+        if stage not in todo:
+            return
+        t0 = time.monotonic()
+        write()
+        counted = COUNTED.get(stage)
+        lineage.write_lineage(
+            spark,
+            os.path.join(out_dir, "lineage"),
+            run_id,
+            stage,
+            wall_ms=int((time.monotonic() - t0) * 1000),
+            out_path=counted and paths[counted],
+            kb_version=kb.version(),
         )
-    )
-    if not (resume and extract_ok):
-        with lineage.StageTimer() as t:
-            # map-only admission (no full-text shuffle). Scan split planning
-            # (spark.sql.files.maxPartitionBytes) controls parallelism; set
-            # num_partitions only to fan out a pathological file layout —
-            # it costs one full shuffle of the raw rows.
-            turns = assemble.admit_turns(transcripts, max_text_len=max_text_len)
-            if num_partitions:
-                turns = turns.repartition(num_partitions)
-            turns = turns.persist()
-            # one Arrow pass: the span UDF runs once per admitted turn, and
-            # its slim output — duplicate (conv_id, turn_idx) rows already
-            # resolved — is persisted and feeds every output below
-            spans = mentions_mod.resolved_mentions(
-                mentions_mod.detect_mentions(turns, kb)
-            ).persist()
-            facts, turn_feats = relations.sentence_facts(spans, kb)
-            facts.write.mode("overwrite").partitionBy("ts_day").parquet(paths["facts"])
-            turn_feats.select(
-                "conv_id", "turn_idx", "ts_day", "pos_cnt", "neg_cnt", "has_so"
-            ).write.mode("overwrite").partitionBy("ts_day").parquet(paths["turn_feats"])
-            materialize.write_mentions(
-                materialize.mention_evidence(spans), paths["mentions"]
-            )
-            # SENTIMENT_PHRASE_RELATION analogue: fact ↔ evidence edges
-            pe = materialize.phrase_fact_edges(facts, spans, kb)
-            pe.write.mode("overwrite").partitionBy("ts_day").parquet(
-                paths["phrase_edges"]
-            )
-            # DOCUMENT_META_DATA provenance rows
-            materialize.document_meta(turns).write.mode("overwrite").parquet(
-                paths["doc_meta"]
-            )
-            # coref-lite entity continuity (active SO set per turn, carried
-            # across silent turns); one narrow conv_id window
-            so = spans.select(
-                "conv_id", "turn_idx", mentions_mod.so_set_col().alias("so_set")
-            )
-            mentions_mod.carryover_from_so(so).write.mode("overwrite").parquet(
-                paths["carryover"]
-            )
-            # release everything this stage pinned: the admitted turns, the
-            # span frame and the slim intermediates of the facts and edges
-            for cached in [turns, spans, *facts._kgx_persisted, *pe._kgx_persisted]:
-                cached.unpersist()
-        lineage.mark_stage_ok(paths["facts"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["turn_feats"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["mentions"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["phrase_edges"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["doc_meta"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["carryover"], {"run_id": run_id})
-        lineage.append_lineage(spark, lin_dir, run_id, "extract", None, None, t.wall_ms, kb_version=kb.version())
-        lineage.append_partition_lineage(spark, lin_dir, run_id, "extract", paths["facts"], kb_version=kb.version())
+        for o in STAGES[stage]:
+            lineage.mark_stage_ok(paths[o], {"run_id": run_id, **meta})
+
+    # -- stage: extract (assemble + mentions + relations), one Spark job ---
+    def write_extract() -> None:
+        # map-only admission (no full-text shuffle). Scan split planning
+        # (spark.sql.files.maxPartitionBytes) controls parallelism; set
+        # num_partitions only to fan out a pathological file layout —
+        # it costs one full shuffle of the raw rows.
+        turns = assemble.admit_turns(transcripts, max_text_len=max_text_len)
+        if num_partitions:
+            turns = turns.repartition(num_partitions)
+        turns = turns.persist()
+        # one Arrow pass: the span UDF runs once per admitted turn, and
+        # its slim output — duplicate (conv_id, turn_idx) rows already
+        # resolved — is persisted and feeds every output below
+        spans = mentions_mod.resolved_mentions(
+            mentions_mod.detect_mentions(turns, kb)
+        ).persist()
+        facts, turn_feats = relations.sentence_facts(spans, kb)
+        facts.write.mode("overwrite").partitionBy("ts_day").parquet(paths["facts"])
+        turn_feats.select(
+            "conv_id", "turn_idx", "ts_day", "pos_cnt", "neg_cnt", "has_so"
+        ).write.mode("overwrite").partitionBy("ts_day").parquet(paths["turn_feats"])
+        materialize.write_mentions(
+            materialize.mention_evidence(spans), paths["mentions"]
+        )
+        # SENTIMENT_PHRASE_RELATION analogue: fact ↔ evidence edges
+        pe = materialize.phrase_fact_edges(facts, spans, kb)
+        pe.write.mode("overwrite").partitionBy("ts_day").parquet(
+            paths["phrase_edges"]
+        )
+        # DOCUMENT_META_DATA provenance rows
+        materialize.document_meta(turns).write.mode("overwrite").parquet(
+            paths["doc_meta"]
+        )
+        # coref-lite entity continuity (active SO set per turn, carried
+        # across silent turns); one narrow conv_id window
+        so = spans.select(
+            "conv_id", "turn_idx", mentions_mod.so_set_col().alias("so_set")
+        )
+        mentions_mod.carryover_from_so(so).write.mode("overwrite").parquet(
+            paths["carryover"]
+        )
+        # release everything this stage pinned: the admitted turns, the
+        # span frame and the slim intermediates of the facts and edges
+        for cached in [turns, spans, *facts._kgx_persisted, *pe._kgx_persisted]:
+            cached.unpersist()
+
+    run("extract", write_extract)
 
     facts = spark.read.parquet(paths["facts"])
     turn_feats = spark.read.parquet(paths["turn_feats"])
-
-    triples_needed = not (resume and lineage.stage_output_ok(paths["triples"]))
-    analytics_needed = not (
-        resume
-        and all(
-            lineage.stage_output_ok(paths[p])
-            for p in (
-                "entity_degrees", "corpus_meta", "url_dim", "query_params",
-                "node_props",
-            )
-        )
-    )
 
     # conversation-level validity gate (the reference's skip-the-whole-
     # document abort, SentimentClassification.java:280-284). Applied HERE —
@@ -153,7 +161,7 @@ def run_pipeline(
     # fully-resumed invocation stays marker-checks-only (no full facts
     # scan just to compute an unused gate).
     n_invalid = 0
-    if triples_needed or analytics_needed:
+    if todo & {"triples", "analytics"}:
         bad = relations.invalid_convs(facts)
         n_invalid = bad.count()
         if n_invalid:
@@ -165,78 +173,60 @@ def run_pipeline(
             turn_feats = turn_feats.join(F.broadcast(bad), "conv_id", "left_anti")
 
     # -- stage: triples (+ SENTIMENT_INDICATOR dim) -------------------------
-    if triples_needed:
-        with lineage.StageTimer() as t:
-            triples = aggregate.all_triples(
-                facts, turn_feats, salt_buckets=salt_buckets
-            )
-            materialize.write_triples(triples, paths["triples"])
-            from kgx import linking
+    def write_triples() -> None:
+        triples = aggregate.all_triples(facts, turn_feats, salt_buckets=salt_buckets)
+        materialize.write_triples(triples, paths["triples"])
+        from kgx import linking
 
-            materialize.indicator_nodes(
-                facts, linking.indicators_dim(spark, kb)
-            ).write.mode("overwrite").parquet(paths["indicator_nodes"])
-            # S8 nested-result marshal: one ordered result doc per conv
-            materialize.result_docs(triples).write.mode("overwrite").partitionBy(
-                "ts_day"
-            ).parquet(paths["results"])
-        lineage.mark_stage_ok(
-            paths["triples"], {"run_id": run_id, "n_invalid_convs": n_invalid}
-        )
-        lineage.mark_stage_ok(paths["indicator_nodes"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["results"], {"run_id": run_id})
-        lineage.append_lineage(spark, lin_dir, run_id, "triples", None, None, t.wall_ms, kb_version=kb.version())
-        lineage.append_partition_lineage(spark, lin_dir, run_id, "triples", paths["triples"], kb_version=kb.version())
+        materialize.indicator_nodes(
+            facts, linking.indicators_dim(spark, kb)
+        ).write.mode("overwrite").parquet(paths["indicator_nodes"])
+        # S8 nested-result marshal: one ordered result doc per conv
+        materialize.result_docs(triples).write.mode("overwrite").partitionBy(
+            "ts_day"
+        ).parquet(paths["results"])
 
-    triples = spark.read.parquet(paths["triples"])
+    run("triples", write_triples, n_invalid_convs=n_invalid)
 
     # -- stage: nodes (canonicalization) -----------------------------------
-    if not (resume and lineage.stage_output_ok(paths["nodes"])):
-        with lineage.StageTimer() as t:
-            nodes = canonical.canonicalize(triples)
-            materialize.write_nodes(nodes, paths["nodes"])
-        lineage.mark_stage_ok(paths["nodes"], {"run_id": run_id})
-        lineage.append_lineage(spark, lin_dir, run_id, "nodes", None, None, t.wall_ms, kb_version=kb.version())
-        lineage.append_partition_lineage(spark, lin_dir, run_id, "nodes", paths["nodes"], kb_version=kb.version())
+    run(
+        "nodes",
+        lambda: materialize.write_nodes(
+            canonical.canonicalize(spark.read.parquet(paths["triples"])),
+            paths["nodes"],
+        ),
+    )
 
     # -- stage: read-side analytics (entity degrees + corpus rollup +
     #    provenance/property dims: URL, QUERY_PARAMETER, SO_PROPERTY) ------
-    if analytics_needed:
-        with lineage.StageTimer() as t:
-            facts.groupBy(
-                F.col("entity_name").alias("subj_name"),
-                F.col("entity_uri").alias("subj_uri"),
-            ).agg(
-                F.countDistinct("conv_id").alias("n_convs"),
-                F.count(F.lit(1)).alias("n_facts"),
-                F.sum(F.when(F.col("score_i") > 0, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_pos"),
-                F.sum(F.when(F.col("score_i") < 0, 1).otherwise(0))
-                .cast("bigint")
-                .alias("n_neg"),
-                F.countDistinct("pred").alias("n_preds"),
-            ).write.mode("overwrite").parquet(paths["entity_degrees"])
-            dm = spark.read.parquet(paths["doc_meta"])
-            materialize.corpus_meta(dm).write.mode("overwrite").parquet(
-                paths["corpus_meta"]
-            )
-            materialize.url_dim(dm).write.mode("overwrite").parquet(
-                paths["url_dim"]
-            )
-            materialize.query_parameters(dm, facts).write.mode(
-                "overwrite"
-            ).parquet(paths["query_params"])
-            materialize.node_properties(facts).write.mode("overwrite").parquet(
-                paths["node_props"]
-            )
-        lineage.mark_stage_ok(paths["entity_degrees"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["corpus_meta"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["url_dim"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["query_params"], {"run_id": run_id})
-        lineage.mark_stage_ok(paths["node_props"], {"run_id": run_id})
-        lineage.append_lineage(spark, lin_dir, run_id, "analytics", None, None, t.wall_ms, kb_version=kb.version())
+    def write_analytics() -> None:
+        facts.groupBy(
+            F.col("entity_name").alias("subj_name"),
+            F.col("entity_uri").alias("subj_uri"),
+        ).agg(
+            F.countDistinct("conv_id").alias("n_convs"),
+            F.count(F.lit(1)).alias("n_facts"),
+            F.sum(F.when(F.col("score_i") > 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_pos"),
+            F.sum(F.when(F.col("score_i") < 0, 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_neg"),
+            F.countDistinct("pred").alias("n_preds"),
+        ).write.mode("overwrite").parquet(paths["entity_degrees"])
+        dm = spark.read.parquet(paths["doc_meta"])
+        materialize.corpus_meta(dm).write.mode("overwrite").parquet(
+            paths["corpus_meta"]
+        )
+        materialize.url_dim(dm).write.mode("overwrite").parquet(paths["url_dim"])
+        materialize.query_parameters(dm, facts).write.mode(
+            "overwrite"
+        ).parquet(paths["query_params"])
+        materialize.node_properties(facts).write.mode("overwrite").parquet(
+            paths["node_props"]
+        )
 
+    run("analytics", write_analytics)
     return paths
 
 

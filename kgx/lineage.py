@@ -2,10 +2,13 @@
 
 The reference writes one DOCUMENT_VERSION row per (document, stage) with the
 artifact URL + ontology version (DatabaseFacade.java:236-281) — its audit
-trail doubles as a resume marker. Ours: one lineage row per (run, stage)
-plus per-partition row counts, appended to a `lineage` parquet table next to
-the outputs; a stage whose output dir carries a `_KGX_STAGE_OK` marker is
-skipped on resume (the killed-run-resumes-without-recompute contract).
+trail doubles as a resume marker. Ours: each finished stage appends ONE
+parquet write to a `lineage` table next to the outputs, holding its summary
+row (partition_id NULL: wall time, KB version, and `rows_out` = the row
+count of the stage's counted output) and one row count per physical
+partition of that output; `rows_in` is still NULL. A stage whose output
+dirs all carry a `_KGX_STAGE_OK` marker is skipped on resume (the
+killed-run-resumes-without-recompute contract).
 
 On a real deployment the outputs are Iceberg tables and the marker is the
 table's snapshot — `MERGE INTO` on (conv_id, classifier) gives the same
@@ -16,12 +19,12 @@ from __future__ import annotations
 
 import json
 import os
-import time
 import uuid
-from datetime import datetime, timezone
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+from kgx import schema
 
 MARKER = "_KGX_STAGE_OK"
 
@@ -39,40 +42,57 @@ def mark_stage_ok(path: str, meta: dict | None = None) -> None:
         json.dump(meta or {}, f)
 
 
-def partition_counts(df: DataFrame) -> DataFrame:
-    """rows per physical partition — the per-partition metric rows."""
-    return df.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-        F.count(F.lit(1)).alias("rows")
-    )
-
-
-def append_partition_lineage(
+def write_lineage(
     spark: SparkSession,
     lineage_dir: str,
     run_id: str,
     stage: str,
-    out_path: str,
+    *,
+    wall_ms: int | None = None,
+    out_path: str | None = None,
+    rows_in: int | None = None,
+    rows_out: int | None = None,
     kb_version: str | None = None,
 ) -> None:
-    """Per-partition metric rows for a stage's written output: one lineage
-    row per physical scan partition with its row count (partition_id set;
-    the stage summary row keeps partition_id NULL). Computed by re-reading
-    the output with zero data columns — parquet satisfies a bare count from
-    footer row counts, so this is a metadata-priced pass even on a 100 TB
-    output — and written distributed (no driver collect)."""
-    counts = partition_counts(spark.read.parquet(out_path))
-    counts.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        F.col("partition_id").cast("int"),
-        F.lit(None).cast("long").alias("rows_in"),
-        F.col("rows").cast("long").alias("rows_out"),
-        F.lit(None).cast("long").alias("wall_ms"),
-        # cast: the default kb_version=None would otherwise be a VOID-type
-        # literal column, which the parquet writer rejects
-        F.lit(kb_version).cast("string").alias("kb_version"),
-        F.current_timestamp().alias("ts"),
-    ).write.mode("append").parquet(lineage_dir)
+    """Append lineage rows in one single-file parquet write: a summary row
+    (partition_id NULL) when `wall_ms` is set, and when `out_path` is set
+    one row count per physical partition of that output, whose sum is the
+    summary's `rows_out`. The counts re-read the output with zero data
+    columns, which parquet answers from footer row counts, and every row
+    is built in the JVM (no driver collect, no Python-list DataFrame)."""
+    parts = []
+    if out_path is not None:
+        counts = (
+            spark.read.parquet(out_path)
+            .groupBy(F.spark_partition_id().cast("int").alias("partition_id"))
+            .agg(F.count(F.lit(1)).alias("rows_out"))
+        )
+        parts.append(counts.withColumn("wall_ms", F.lit(None).cast("long")))
+        total = counts.agg(F.coalesce(F.sum("rows_out"), F.lit(0)).alias("rows_out"))
+    else:
+        total = spark.range(1).select(F.lit(rows_out).cast("long").alias("rows_out"))
+    if wall_ms is not None:
+        parts.insert(0, total.select(
+            F.lit(None).cast("int").alias("partition_id"), "rows_out",
+            F.lit(wall_ms).cast("long").alias("wall_ms"),
+        ))
+    rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    const = {
+        "run_id": F.lit(run_id),
+        "stage": F.lit(stage),
+        # rows_in only on the summary row; per-partition rows keep it NULL
+        "rows_in": F.when(F.col("partition_id").isNull(), F.lit(rows_in)),
+        "kb_version": F.lit(kb_version),
+        "ts": F.current_timestamp(),
+    }
+    # cast each column to its LINEAGE type: a None literal is otherwise a
+    # VOID column, which the parquet writer rejects
+    rows.select(
+        *[
+            const.get(f.name, F.col(f.name)).cast(f.dataType).alias(f.name)
+            for f in schema.LINEAGE
+        ]
+    ).coalesce(1).write.mode("append").parquet(lineage_dir)
 
 
 def append_lineage(
@@ -85,30 +105,19 @@ def append_lineage(
     wall_ms: int,
     kb_version: str | None = None,
 ) -> None:
-    row = [
-        (
-            run_id,
-            stage,
-            None,
-            rows_in,
-            rows_out,
-            wall_ms,
-            kb_version,
-            datetime.now(timezone.utc).replace(tzinfo=None),
-        )
-    ]
-    from kgx import schema
-
-    spark.createDataFrame(row, schema.LINEAGE).coalesce(1).write.mode("append").parquet(
-        lineage_dir
-    )
+    """One stage summary row with the given counts."""
+    write_lineage(spark, lineage_dir, run_id, stage, wall_ms=wall_ms,
+                  rows_in=rows_in, rows_out=rows_out, kb_version=kb_version)
 
 
-class StageTimer:
-    def __enter__(self):
-        self.t0 = time.monotonic()
-        return self
-
-    def __exit__(self, *exc):
-        self.wall_ms = int((time.monotonic() - self.t0) * 1000)
-        return False
+def append_partition_lineage(
+    spark: SparkSession,
+    lineage_dir: str,
+    run_id: str,
+    stage: str,
+    out_path: str,
+    kb_version: str | None = None,
+) -> None:
+    """Per-partition row counts of a written output, no summary row."""
+    write_lineage(spark, lineage_dir, run_id, stage, out_path=out_path,
+                  kb_version=kb_version)

@@ -1355,12 +1355,14 @@ def stats_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     column totals and N are exact BIGINTs; each cell emits its own
     expected count and (O-E)^2/E contribution so no doubles are ever
     summed ACROSS rows (the corpus-order hazard every stats row in this
-    repo avoids). The float path is engine-exact WITHOUT quantization:
-    d = O*N - r*c is a BIGINT with |d| <= N^2 (< 2^53 up to ~94M
-    events), so CAST to double is exact, and d*d/(r*c*N) is one IEEE
-    multiply + one IEEE divide — both correctly-rounded deterministic
-    ops. (Beyond 94M events, quantize like stats_correlation; the
-    banding CASE ladder itself is scale-free.) A driver summing the
+    repo avoids). Each factor is cast to DOUBLE before it is multiplied,
+    so r*c*N cannot overflow BIGINT. The float path is engine-exact
+    WITHOUT quantization while N^2 < 2^53 (~94M events): O*N and r*c
+    are exact doubles, so d = O*N - r*c is exact, and d*d/(r*c*N) is
+    correctly-rounded IEEE arithmetic in a fixed order. (Beyond 94M
+    events, quantize like stats_correlation; the banding CASE ladder
+    itself is scale-free.) Events with a NULL value are left out: they
+    have no band. A driver summing the
     `contrib` column gets the chi-square statistic; dof =
     (n_types-1)*(n_bands-1) is derivable from the row count."""
     from kgx import stats as stats_mod
@@ -1376,6 +1378,7 @@ WITH b AS (
               WHEN value < {_CHI2_BANDS[2]} THEN 'b2'
               ELSE 'b3' END AS band
   FROM events
+  WHERE value IS NOT NULL
 ),
 o AS (SELECT event_type, band, count(*) AS observed FROM b GROUP BY 1, 2),
 r AS (SELECT event_type, sum(observed) AS row_total FROM o GROUP BY 1),
@@ -1385,10 +1388,14 @@ SELECT o.event_type, o.band, CAST(o.observed AS BIGINT) AS observed,
        CAST(r.row_total AS BIGINT) AS row_total,
        CAST(c.col_total AS BIGINT) AS col_total,
        CAST(n.n_total AS BIGINT) AS n_total,
-       CAST(r.row_total * c.col_total AS DOUBLE) / n.n_total AS expected,
-       CAST(o.observed * n.n_total - r.row_total * c.col_total AS DOUBLE)
-         * CAST(o.observed * n.n_total - r.row_total * c.col_total AS DOUBLE)
-         / CAST(r.row_total * c.col_total * n.n_total AS DOUBLE) AS contrib
+       CAST(r.row_total AS DOUBLE) * CAST(c.col_total AS DOUBLE)
+         / CAST(n.n_total AS DOUBLE) AS expected,
+       (CAST(o.observed AS DOUBLE) * CAST(n.n_total AS DOUBLE)
+         - CAST(r.row_total AS DOUBLE) * CAST(c.col_total AS DOUBLE))
+         * (CAST(o.observed AS DOUBLE) * CAST(n.n_total AS DOUBLE)
+         - CAST(r.row_total AS DOUBLE) * CAST(c.col_total AS DOUBLE))
+         / (CAST(r.row_total AS DOUBLE) * CAST(c.col_total AS DOUBLE)
+         * CAST(n.n_total AS DOUBLE)) AS contrib
 FROM o JOIN r USING (event_type) JOIN c USING (band) CROSS JOIN n
 """
 _ATTR_WINDOW_DAYS = 2

@@ -286,10 +286,16 @@ def chi2_cells(
     stages cost nothing regardless of input scale; the one real shuffle
     is the first groupBy, map-side combined). Each output row carries
     its OWN expected count and (O-E)^2/E contribution: summing doubles
-    across rows is never needed inside the operator, and the emitted
-    floats are engine-exact because d = O*N - r*c and the totals are
-    exactly double-representable (< 2^53 up to ~94M rows) and
-    d*d / (r*c*N) is one IEEE multiply + one IEEE divide.
+    across rows is never needed inside the operator. Every factor is
+    cast to DOUBLE before it is multiplied, so no product can overflow
+    BIGINT (r*c*N passes 2^63 near N = 2.1M rows; under ANSI mode that
+    raised ARITHMETIC_OVERFLOW). The emitted floats stay engine-exact
+    while N^2 < 2^53 (N up to ~94M rows): O*N and r*c are then exact
+    doubles, so d = O*N - r*c is exact, and (r*c)*N rounds once, as the
+    BIGINT-to-DOUBLE cast of an exact product would.
+
+    Rows whose value is NULL are dropped before banding: a NULL has no
+    band, and it must not fall into the top one.
 
     Returns (type, band, observed, row_total, col_total, n_total,
     expected, contrib); chi2 = sum(contrib),
@@ -300,7 +306,8 @@ def chi2_cells(
         band = band.when(F.col(value_col) < thr, F.lit(f"b{i}"))
     band = band.otherwise(F.lit(f"b{len(bands)}"))
     o = (
-        df.select(F.col(type_col).alias("event_type"), band.alias("band"))
+        df.where(F.col(value_col).isNotNull())
+        .select(F.col(type_col).alias("event_type"), band.alias("band"))
         .groupBy("event_type", "band")
         .agg(F.count("*").alias("observed"))
     )
@@ -312,10 +319,11 @@ def chi2_cells(
         .join(F.broadcast(c), "band")
         .crossJoin(F.broadcast(n))
     )
-    d = (
-        F.col("observed") * F.col("n_total")
-        - F.col("row_total") * F.col("col_total")
-    ).cast("double")
+    obs, r_t, c_t, n_t = (
+        F.col(k).cast("double")
+        for k in ("observed", "row_total", "col_total", "n_total")
+    )
+    d = obs * n_t - r_t * c_t
     return cell.select(
         "event_type",
         "band",
@@ -323,16 +331,8 @@ def chi2_cells(
         F.col("row_total").cast("bigint").alias("row_total"),
         F.col("col_total").cast("bigint").alias("col_total"),
         F.col("n_total").cast("bigint").alias("n_total"),
-        (
-            (F.col("row_total") * F.col("col_total")).cast("double")
-            / F.col("n_total")
-        ).alias("expected"),
-        (
-            d * d
-            / (
-                F.col("row_total") * F.col("col_total") * F.col("n_total")
-            ).cast("double")
-        ).alias("contrib"),
+        (r_t * c_t / n_t).alias("expected"),
+        (d * d / (r_t * c_t * n_t)).alias("contrib"),
     )
 
 

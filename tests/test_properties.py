@@ -84,6 +84,19 @@ def test_job_resume_skips_completed_stages(spark, tmp_path):
     assert spark.read.parquet(paths["triples"]).count() == first
     assert os.path.getmtime(os.path.join(paths["facts"], "_KGX_STAGE_OK")) == extract_mtime
 
+    # losing ANY output of a stage reruns that whole stage: with results/
+    # gone, triples reruns and restores it; extract stays untouched
+    import shutil
+
+    triples_marker = os.path.join(paths["triples"], "_KGX_STAGE_OK")
+    triples_mtime = os.path.getmtime(triples_marker)
+    shutil.rmtree(paths["results"])
+    job.run_pipeline(spark, transcripts, out, resume=True)
+    assert os.path.exists(os.path.join(paths["results"], "_KGX_STAGE_OK"))
+    assert os.path.getmtime(triples_marker) != triples_mtime
+    assert spark.read.parquet(paths["triples"]).count() == first
+    assert os.path.getmtime(os.path.join(paths["facts"], "_KGX_STAGE_OK")) == extract_mtime
+
 
 # ---------------------------------------------------------------------------
 # late (slim) dedup vs early (full-text) dedup

@@ -154,9 +154,15 @@ def test_kb_version_stamped_into_lineage(spark, tmp_path):
     kb2 = resources.driver_kb()
     assert kb2.version() != kb.version()
 
+    # one lineage write per stage: one data file each
+    import glob
+
+    assert len(glob.glob(f"{out}/lineage/*.parquet")) == 4
+
     # per-partition metric rows (north rule: per-partition lineage): for
     # each core output, partition_id-tagged rows whose counts sum to the
-    # written row count; stage summary rows keep partition_id NULL
+    # written row count; each stage's one summary row keeps partition_id
+    # NULL and carries that count as rows_out
     import pyspark.sql.functions as F
 
     for stage, out_name in (("extract", "facts"), ("triples", "triples"), ("nodes", "nodes")):
@@ -165,10 +171,18 @@ def test_kb_version_stamped_into_lineage(spark, tmp_path):
         )
         assert per_part.count() >= 1, stage
         total = per_part.agg(F.sum("rows_out")).collect()[0][0]
-        assert total == spark.read.parquet(f"{out}/{out_name}").count(), stage
-        assert lin.filter(
+        n_out = spark.read.parquet(f"{out}/{out_name}").count()
+        assert total == n_out, stage
+        summary = lin.filter(
             (F.col("stage") == stage) & F.col("partition_id").isNull()
-        ).count() == 1, stage
+        ).collect()
+        assert len(summary) == 1, stage
+        assert summary[0]["rows_out"] == n_out, stage
+        assert summary[0]["wall_ms"] is not None, stage
+    analytics = lin.filter(F.col("stage") == "analytics").collect()
+    assert len(analytics) == 1
+    assert analytics[0]["partition_id"] is None
+    assert analytics[0]["rows_out"] is None
 
 
 # ---------------------------------------------------------------------------

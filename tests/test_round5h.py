@@ -188,6 +188,26 @@ def test_chi2_band_ladder_edges(spark):
     assert ("y", "b1", 1) in got and ("y", "b2", 1) in got
 
 
+def test_chi2_null_value_joins_no_cell(spark):
+    # a NULL value has no band: it must not land in the top one
+    rows = [(1, "x", 1.0), (1, "x", None), (1, "y", 99.0)]
+    out = stats.chi2_cells(_ev(spark, rows), "event_type", "value", (15.0,))
+    got = {(c.event_type, c.band): (c.observed, c.n_total) for c in out.collect()}
+    assert got == {("x", "b0"): (1, 2), ("y", "b1"): (1, 2)}
+
+
+def test_chi2_large_table_does_not_overflow(spark):
+    # one cell with r = c = N = 2.2M: r*c*N > 2^63 overflowed BIGINT
+    n = 2_200_000
+    ev = spark.range(n).select(
+        F.lit("x").alias("event_type"), F.lit(1.0).alias("value")
+    )
+    (c,) = stats.chi2_cells(ev, "event_type", "value", (15.0,)).collect()
+    assert (c.observed, c.row_total, c.col_total, c.n_total) == (n, n, n, n)
+    assert c.expected == float(n)
+    assert c.contrib == 0.0
+
+
 # ---------------------------------------------------------------------------
 # position attribution
 # ---------------------------------------------------------------------------

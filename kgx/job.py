@@ -6,9 +6,12 @@
 
 Stage graph, declared once in the `STAGES` table (stage → the outputs it
 writes). One runner drives every stage: it skips a stage whose outputs all
-carry a `_KGX_STAGE_OK` marker, else runs it, appends its lineage rows in
-one write and marks its outputs, so a killed run resumes at the first
-incomplete stage (SURVEY.md §3 tail):
+carry a `_KGX_STAGE_OK` marker for the same input, else clears and reruns
+it, appends its lineage rows in one write and marks its outputs, so a
+killed run resumes at the first incomplete stage (SURVEY.md §3 tail). The
+marker records the input identity (KB version, max_text_len, input files):
+a different input reruns everything, and every stage after a rerun stage
+reruns too, so no output is built from a stale upstream one:
 
     assemble → extract (mentions+relations → facts/turn_feats/mentions/
     phrase_edges/doc_meta/carryover) → triples (+ indicator_nodes,
@@ -19,7 +22,9 @@ incomplete stage (SURVEY.md §3 tail):
 from __future__ import annotations
 
 import argparse
+import hashlib
 import os
+import shutil
 import time
 from collections.abc import Callable
 
@@ -57,6 +62,18 @@ STAGES: dict[str, tuple[str, ...]] = {
 COUNTED = {"extract": "facts", "triples": "triples", "nodes": "nodes"}
 
 
+def input_identity(
+    transcripts: DataFrame, kb: resources.KnowledgeBase, max_text_len: int
+) -> str:
+    """What a stage's outputs were computed from: the KB version, the
+    admission limit and the input's sorted file list (its plan's semantic
+    hash when it reads no files). A file rewritten in place keeps its
+    identity; write a new input to a new path."""
+    src = sorted(transcripts.inputFiles()) or transcripts.semanticHash()
+    payload = repr((kb.version(), max_text_len, src))
+    return hashlib.md5(payload.encode()).hexdigest()[:16]
+
+
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -69,15 +86,18 @@ def run_pipeline(
     salt_buckets: int | None = None,
 ) -> dict[str, str]:
     """Run all stages; returns {output: path}. Idempotent + resumable: a
-    stage reruns whole unless every one of its outputs carries a marker."""
+    stage reruns whole unless every one of its outputs carries a marker for
+    this input, and every stage after a rerun stage reruns too."""
     kb = kb or resources.default_kb()
     run_id = run_id or lineage.new_run_id()
+    input_id = input_identity(transcripts, kb, max_text_len)
     paths = {o: os.path.join(out_dir, o) for outs in STAGES.values() for o in outs}
-    todo = {
-        stage
-        for stage, outs in STAGES.items()
-        if not (resume and all(lineage.stage_output_ok(paths[o]) for o in outs))
-    }
+    todo: set[str] = set()
+    for stage, outs in STAGES.items():
+        if todo or not (
+            resume and all(lineage.stage_output_ok(paths[o], input_id) for o in outs)
+        ):
+            todo.add(stage)
 
     def run(stage: str, write: Callable[[], None], **meta) -> None:
         """Run a stage's writes unless resume finds it done, then append
@@ -86,6 +106,10 @@ def run_pipeline(
         if stage not in todo:
             return
         t0 = time.monotonic()
+        # start from empty dirs: a dynamic partition overwrite would keep
+        # the partitions (and the marker) of an earlier input
+        for o in STAGES[stage]:
+            shutil.rmtree(paths[o], ignore_errors=True)
         write()
         counted = COUNTED.get(stage)
         lineage.write_lineage(
@@ -98,9 +122,12 @@ def run_pipeline(
             kb_version=kb.version(),
         )
         for o in STAGES[stage]:
-            lineage.mark_stage_ok(paths[o], {"run_id": run_id, **meta})
+            lineage.mark_stage_ok(
+                paths[o], {"run_id": run_id, "input": input_id, **meta}
+            )
 
-    # -- stage: extract (assemble + mentions + relations), one Spark job ---
+    # -- stage: extract (assemble + mentions + relations): six writes, each
+    #    its own Spark jobs (~35 in all) over one persisted span frame ------
     def write_extract() -> None:
         # map-only admission (no full-text shuffle). Scan split planning
         # (spark.sql.files.maxPartitionBytes) controls parallelism; set
@@ -124,8 +151,12 @@ def run_pipeline(
         materialize.write_mentions(
             materialize.mention_evidence(spans), paths["mentions"]
         )
-        # SENTIMENT_PHRASE_RELATION analogue: fact ↔ evidence edges
-        pe = materialize.phrase_fact_edges(facts, spans, kb)
+        # SENTIMENT_PHRASE_RELATION analogue: fact ↔ evidence edges, from
+        # the facts just written — the lazy plan would rerun their linking
+        # joins once per edge role
+        pe = materialize.phrase_fact_edges(
+            spark.read.parquet(paths["facts"]), spans, kb
+        )
         pe.write.mode("overwrite").partitionBy("ts_day").parquet(
             paths["phrase_edges"]
         )
@@ -181,8 +212,10 @@ def run_pipeline(
         materialize.indicator_nodes(
             facts, linking.indicators_dim(spark, kb)
         ).write.mode("overwrite").parquet(paths["indicator_nodes"])
-        # S8 nested-result marshal: one ordered result doc per conv
-        materialize.result_docs(triples).write.mode("overwrite").partitionBy(
+        # S8 nested-result marshal: one ordered result doc per conv, from
+        # the triples just written (not a second all_triples run)
+        written = spark.read.parquet(paths["triples"])
+        materialize.result_docs(written).write.mode("overwrite").partitionBy(
             "ts_day"
         ).parquet(paths["results"])
 

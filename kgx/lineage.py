@@ -33,8 +33,14 @@ def new_run_id() -> str:
     return uuid.uuid4().hex[:12]
 
 
-def stage_output_ok(path: str) -> bool:
-    return os.path.exists(os.path.join(path, MARKER))
+def stage_output_ok(path: str, input_id: str) -> bool:
+    """`path` carries a marker written for input `input_id` (a marker
+    without one, or for another input, does not count)."""
+    try:
+        with open(os.path.join(path, MARKER)) as f:
+            return json.load(f).get("input") == input_id
+    except (OSError, ValueError):
+        return False
 
 
 def mark_stage_ok(path: str, meta: dict | None = None) -> None:

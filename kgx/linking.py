@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from kgx.resources import PRED_REPUTATION, KnowledgeBase
+from kgx.resources import PRED_REPUTATION, KnowledgeBase, local_df
 
 
 def _entity_id(name_col, uri_col):
@@ -63,9 +63,9 @@ def feature_alias_dim(spark: SparkSession, kb: KnowledgeBase) -> DataFrame:
     alias = kb.feature_alias_df(spark).select(
         F.lower("alias").alias("alias_lc"), F.col("canonical")
     )
-    surf = spark.createDataFrame(kb.feature_surfaces, "alias string, canonical string").select(
-        F.lower("alias").alias("alias_lc"), "canonical"
-    )
+    surf = local_df(
+        spark, kb.feature_surfaces, "alias string, canonical string"
+    ).select(F.lower("alias").alias("alias_lc"), "canonical")
     # deterministic first-wins (min canonical), not dropDuplicates: a
     # user-supplied KB may map one alias to two canonicals, and
     # dropDuplicates keeps an arbitrary row per run — the same
@@ -164,7 +164,7 @@ def triple_type_check(
     from kgx.resources import DOMAIN_RULES
 
     rule_rows = [(p, list(ts)) for p, ts in (rules or DOMAIN_RULES).items()]
-    rdf = spark.createDataFrame(rule_rows, "pred string, allowed array<string>")
+    rdf = local_df(spark, rule_rows, "pred string, allowed array<string>")
     ind = (
         kb.indicators_df(spark)
         .select("indicator_uri", "object_class")

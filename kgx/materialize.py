@@ -268,9 +268,11 @@ def phrase_fact_edges(facts: DataFrame, turns_with_mentions: DataFrame, kb) -> D
       * indicator   — the indicator phrase whose linked indicator_uri
                       equals the fact's, indirect facts only.
 
-    Shuffle shape: the mention side and the fact side are both keyed
-    (conv_id, turn_idx) — children of the same conv_id-partitioned parent,
-    so the joins co-locate; dims broadcast.
+    Shuffle shape: `kgx.job` passes the facts read back from their parquet
+    output, so no role branch reruns the linking joins that built them; a
+    file scan carries no partitioning, so each role join exchanges both
+    sides on (conv_id, turn_idx) unless AQE broadcasts the smaller one.
+    The mention side is the one persisted `ev` frame below; dims broadcast.
     """
     from pyspark.sql import Window
 

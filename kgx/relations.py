@@ -229,7 +229,8 @@ def facts_from_turn_features(
     facts = direct.unionByName(indirect)
     # hand the persisted intermediates to the caller so long-lived sessions
     # (tests, benchmarks, repeated run_pipeline calls) can release executor
-    # cache once the facts are materialized
+    # cache once the facts are materialized; in kgx.job only the facts and
+    # turn_feats writes read them (phrase_edges reads the written facts)
     facts._kgx_persisted = [tf, linked] if persist else []
     return facts, tf
 

@@ -31,8 +31,35 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from kgx import schema
+
+
+def local_df(
+    spark: SparkSession, rows: list, row_schema: StructType | str
+) -> DataFrame:
+    """A driver-built table (a list of row tuples) as an Arrow-backed
+    `LocalRelation`: the rows travel inside the plan (`LocalTableScan`), so
+    scanning the table never starts a Python worker, where
+    `createDataFrame(<list>)` makes a Python RDD (`Scan ExistingRDD`).
+
+    Every row is checked against the schema first, with the verifier the
+    list path uses, so a malformed row raises the list path's error
+    (FIELD_NOT_NULLABLE_WITH_NAME, VALUE_OUT_OF_BOUNDS,
+    FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME, ...), not an Arrow one."""
+    import pandas as pd
+    from pyspark.sql.types import _make_type_verifier
+
+    if isinstance(row_schema, str):
+        row_schema = StructType.fromDDL(row_schema)
+    verify = _make_type_verifier(row_schema)
+    for row in rows:
+        verify(row)
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=row_schema.fieldNames()), row_schema
+    )
+
 
 # the three canonical predicates (SENTIMENT_FEATURE_TYPE rows,
 # insertAllConstantTypes.sql; alias normalization GlobalParameters.java:147-159)
@@ -114,7 +141,7 @@ def class_hierarchy_df(spark: SparkSession) -> DataFrame:
     """CLASS_HIERARCHY as a (src=child URI, dst=parent URI) edge DataFrame
     (dimension-sized: always broadcast, never shuffled)."""
     rows = [(_NS + c, _NS + p) for c, p in CLASS_HIERARCHY]
-    return spark.createDataFrame(rows, "src string, dst string")
+    return local_df(spark, rows, "src string, dst string")
 
 
 # --- synthetic knowledge base (deterministic, original content) -------------
@@ -217,16 +244,16 @@ class KnowledgeBase:
         return hashlib.md5(payload.encode()).hexdigest()[:16]
 
     def gazetteer_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.gazetteer, schema.GAZETTEER)
+        return local_df(spark, self.gazetteer, schema.GAZETTEER)
 
     def lexicon_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.lexicon, schema.ORIENTATION_LEXICON)
+        return local_df(spark, self.lexicon, schema.ORIENTATION_LEXICON)
 
     def indicators_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.indicators, schema.INDICATORS)
+        return local_df(spark, self.indicators, schema.INDICATORS)
 
     def feature_alias_df(self, spark: SparkSession) -> DataFrame:
-        return spark.createDataFrame(self.feature_alias, schema.FEATURE_ALIAS)
+        return local_df(spark, self.feature_alias, schema.FEATURE_ALIAS)
 
 
 def default_kb() -> KnowledgeBase:
@@ -304,7 +331,7 @@ def dom_bounds_df(spark: SparkSession) -> DataFrame:
         (label, Decimal(str(lo)), Decimal(str(hi)), Decimal(str(avg)))
         for label, lo, hi, avg in DOM_BOUNDS
     ]
-    return spark.createDataFrame(rows, schema.DOM_BOUNDS)
+    return local_df(spark, rows, schema.DOM_BOUNDS)
 
 
 def dom_label(score: float | None) -> str:

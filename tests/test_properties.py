@@ -77,12 +77,14 @@ def test_job_resume_skips_completed_stages(spark, tmp_path):
     assert spark.read.parquet(paths2["triples"]).count() == first
     assert os.path.getmtime(os.path.join(paths["facts"], "_KGX_STAGE_OK")) == extract_mtime
 
-    # simulate kill after extract: downstream marker removed → only that
-    # stage recomputes; extract stays untouched
+    # simulate kill after extract: downstream marker removed → that stage
+    # and every later one recompute; extract stays untouched
+    nodes_mtime = os.path.getmtime(os.path.join(paths["nodes"], "_KGX_STAGE_OK"))
     os.remove(os.path.join(paths["triples"], "_KGX_STAGE_OK"))
     job.run_pipeline(spark, transcripts, out, resume=True)
     assert spark.read.parquet(paths["triples"]).count() == first
     assert os.path.getmtime(os.path.join(paths["facts"], "_KGX_STAGE_OK")) == extract_mtime
+    assert os.path.getmtime(os.path.join(paths["nodes"], "_KGX_STAGE_OK")) != nodes_mtime
 
     # losing ANY output of a stage reruns that whole stage: with results/
     # gone, triples reruns and restores it; extract stays untouched
@@ -96,6 +98,19 @@ def test_job_resume_skips_completed_stages(spark, tmp_path):
     assert os.path.getmtime(triples_marker) != triples_mtime
     assert spark.read.parquet(paths["triples"]).count() == first
     assert os.path.getmtime(os.path.join(paths["facts"], "_KGX_STAGE_OK")) == extract_mtime
+
+    # a different input into the same out dir reruns extract (and so
+    # everything): no triple of the old input survives
+    sub = pdf[pdf["conv_id"].isin(pdf["conv_id"].unique()[:4])]
+    inp4 = str(tmp_path / "in4.parquet")
+    sub.to_parquet(inp4, index=False)
+    job.run_pipeline(spark, spark.read.parquet(inp4), out, resume=True)
+    assert os.path.getmtime(os.path.join(paths["facts"], "_KGX_STAGE_OK")) != extract_mtime
+    t4 = spark.read.parquet(paths["triples"])
+    assert t4.count() != first
+    assert {r.conv_id for r in t4.select("conv_id").distinct().collect()} <= set(
+        sub["conv_id"]
+    )
 
 
 # ---------------------------------------------------------------------------

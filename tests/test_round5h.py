@@ -636,3 +636,46 @@ def test_assortativity_star_is_negative(spark):
     out = stats.correlation(j, "g", "x", "y").collect()[0]
     assert out.n == 10
     assert out.pearson_r == -1.0
+
+
+# ---------------------------------------------------------------------------
+# driver-built tables: local relations, rows still verified
+# ---------------------------------------------------------------------------
+
+def test_kb_tables_are_local_relations_and_verify_rows(spark):
+    """Every driver-built KB table plans as a LocalTableScan (its rows ride
+    in the plan, no Python RDD to scan), and a malformed row still raises
+    the error the list-built table raised."""
+    import dataclasses
+
+    import pytest
+    from pyspark.errors import PySparkValueError
+
+    from kgx import linking, resources
+
+    kb = resources.default_kb()
+    tables = [
+        kb.gazetteer_df(spark),
+        kb.lexicon_df(spark),
+        kb.indicators_df(spark),
+        kb.feature_alias_df(spark),
+        linking.feature_alias_dim(spark, kb),
+        resources.class_hierarchy_df(spark),
+        resources.dom_bounds_df(spark),
+    ]
+    for df in tables:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert tables[2].count() == len(kb.indicators)
+
+    uri, name, etype, _ = kb.gazetteer[0]
+    no_surface = dataclasses.replace(
+        kb, gazetteer=[(uri, name, etype, None)] + kb.gazetteer[1:]
+    )
+    with pytest.raises(PySparkValueError, match="FIELD_NOT_NULLABLE_WITH_NAME"):
+        no_surface.gazetteer_df(spark)
+    ind = list(kb.indicators[0])
+    ind[4] = 2**40
+    huge = dataclasses.replace(kb, indicators=[tuple(ind)] + kb.indicators[1:])
+    with pytest.raises(PySparkValueError, match="VALUE_OUT_OF_BOUNDS"):
+        huge.indicators_df(spark)

@@ -132,7 +132,7 @@ HEADLINE = [
 
 
 def run_headline(sf_dir: str, cpus: int) -> tuple[dict[str, float], dict[str, list[float]]]:
-    from kgx import session
+    from kgx import cache, session
     from kgx.queries import REGISTRY
 
     spark = session.get_spark(
@@ -169,14 +169,15 @@ def run_headline(sf_dir: str, cpus: int) -> tuple[dict[str, float], dict[str, li
             ).parquet(f"{warm_dir}/{tbl}.parquet")
         for qn in HEADLINE:
             try:
-                REGISTRY[qn][0](spark, warm_dir).count()
+                with cache.scope():
+                    REGISTRY[qn][0](spark, warm_dir).count()
             except Exception as e:  # pragma: no cover - warm best-effort
                 print(f"  warm {qn} failed: {e}", file=sys.stderr)
     finally:
-        for _sp, facts, _tf in _KG_CACHE.values():
+        # the kg memo's caches are session-lifetime: drop them by hand
+        for _sp, facts, tf in _KG_CACHE.values():
             facts.unpersist()
-            for cached in getattr(facts, "_kgx_persisted", []):
-                cached.unpersist()
+            tf.unpersist()
         _KG_CACHE.clear()
         shutil.rmtree(warm_dir, ignore_errors=True)
 
@@ -197,15 +198,12 @@ def run_headline(sf_dir: str, cpus: int) -> tuple[dict[str, float], dict[str, li
     for pass_i in range(n_passes):
         for name in HEADLINE:
             fn, _sql = REGISTRY[name]
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            n = df.count()
-            dt = round(time.monotonic() - t0, 3)
-            # release caches the query handed us ownership of (the
-            # sentence_facts/_kgx_persisted contract) so they don't leak
-            # into later queries' memory budget within a pass
-            for cached in getattr(df, "_kgx_persisted", []):
-                cached.unpersist()
+            # the scope releases the caches the query made, so they don't
+            # leak into later queries' memory budget within a pass
+            with cache.scope():
+                t0 = time.monotonic()
+                n = fn(spark, sf_dir).count()
+                dt = round(time.monotonic() - t0, 3)
             passes[name].append(dt)
             print(f"  {name}[{pass_i}]: {dt:.2f}s ({n} rows)", file=sys.stderr)
         _KG_CACHE.clear()

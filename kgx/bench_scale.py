@@ -49,7 +49,7 @@ def main() -> None:
     )
     args = p.parse_args()
 
-    from kgx import aggregate, assemble, relations, resources, session
+    from kgx import aggregate, assemble, cache, relations, resources, session
 
     # AQE off for the local probe: its sequential query-stage
     # materialization adds ~1-2s latency per shuffle boundary in local mode,
@@ -83,6 +83,7 @@ def main() -> None:
     transcripts = spark.read.parquet(args.input)
     n_turns = transcripts.count()
 
+    @cache.scope()
     def run(df):
         # identical dataflow to job.run_pipeline's hot path: map-only
         # admission, slim late dedup inside extract_facts
@@ -90,12 +91,7 @@ def main() -> None:
         facts, tf = relations.extract_facts(turns, kb)
         # facts feeds both the sentence and the document branch of
         # all_triples; persist so the link joins run once, not per branch
-        facts = facts.persist()
-        n = aggregate.all_triples(facts, tf).count()
-        facts.unpersist()
-        for cached in getattr(facts, "_kgx_persisted", []):
-            cached.unpersist()
-        return n
+        return aggregate.all_triples(cache.persist(facts), tf).count()
 
     # Warm-up on a FILE SUBSET of the input (~1/8 of the parquet files),
     # not .limit(): limit() inserts Local/GlobalLimit nodes, so its

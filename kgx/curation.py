@@ -52,6 +52,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from kgx import cache
 from kgx.dedup import md5_hash60, shingles_from_tokens
 from kgx.textops import tokens
 
@@ -680,10 +681,12 @@ def dsir_weights(
         "id", "is_t", (md5_hash60(F.col("w")) % n_buckets).cast("int").alias("b")
     )
     tf = tok.groupBy("id", "is_t", "b").agg(F.count("*").alias("tf"))
-    dim = tf.groupBy("b").agg(
-        F.sum("tf").alias("c_r"),
-        F.sum(F.when(F.col("is_t"), F.col("tf")).otherwise(F.lit(0))).alias("c_t"),
-    ).persist()
+    dim = cache.persist(
+        tf.groupBy("b").agg(
+            F.sum("tf").alias("c_r"),
+            F.sum(F.when(F.col("is_t"), F.col("tf")).otherwise(F.lit(0))).alias("c_t"),
+        )
+    )
     totals = dim.agg(
         F.sum("c_r").cast("long").alias("t_r"), F.sum("c_t").cast("long").alias("t_t")
     )
@@ -698,7 +701,7 @@ def dsir_weights(
         F.sum("term").cast("long").alias("score_num_q"),
         F.sum("tf").cast("long").alias("n_tokens"),
     )
-    out = per_doc.crossJoin(F.broadcast(totals)).select(
+    return per_doc.crossJoin(F.broadcast(totals)).select(
         F.col("id").alias(id_col),
         "n_tokens",
         "score_num_q",
@@ -708,8 +711,6 @@ def dsir_weights(
             " AS DOUBLE)"
         ).alias("dsir_weight"),
     )
-    out._kgx_persisted = [dim]
-    return out
 
 
 def cdc_chunks(

@@ -30,6 +30,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from kgx import cache
 from kgx.textops import tokens
 
 _P = 2147483647  # 2^31 - 1, Mersenne prime: (a*h+b) stays < 2^62 (no ANSI overflow)
@@ -122,11 +123,10 @@ def ngram_jaccard_pairs(
     # otherwise inlines tokens() into the shingle transform lambda, where
     # outer expressions re-evaluate once per shingle position — O(len^2)
     # tokenization (measured 4s of the 5s ngram wall at sf0.1)
-    tok = (
+    tok = cache.persist(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
         .repartition(npart, "id")
         .select("id", tokens(F.lower(F.col("txt"))).alias("toks"))
-        .persist()
     )
     sh = tok.select(
         "id", shingles_from_tokens(F.col("toks"), n).alias("sh")
@@ -136,7 +136,7 @@ def ngram_jaccard_pairs(
     # (26 split() occurrences in the physical plan; 3x wall time measured).
     # MEMORY_AND_DISK, ~one row per (doc, distinct shingle) — the same
     # footprint the join shuffle moves anyway.
-    inv = sh.select("id", "n_sh", F.explode("sh").alias("s")).persist()
+    inv = cache.persist(sh.select("id", "n_sh", F.explode("sh").alias("s")))
     # Size-ratio prefilter (exact): J(A,B) <= min(|A|,|B|)/max(|A|,|B|), so
     # J >= t requires t*|B| <= |A| and t*|A| <= |B|. Prunes candidate rows
     # at the join before the per-pair aggregation ever sees them.
@@ -173,20 +173,20 @@ def ngram_jaccard_pairs(
         )
 
     if max_df is None:
-        return give_ownership(_agg_path(inv), [tok, inv])
+        return _agg_path(inv)
 
-    hot = (
+    hot = cache.persist(
         inv.groupBy("s")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > max_df)
         .select("s")
-    ).persist()
+    )
     if hot.isEmpty():
         # no shingle exceeds the cap → the capped index IS the full index;
         # take the cheaper count-aggregation path (no per-pair array
         # intersection). Semantically identical to the capped path.
-        return give_ownership(_agg_path(inv), [tok, inv, hot])
-    sh = sh.persist()
+        return _agg_path(inv)
+    sh = cache.persist(sh)
     capped = inv.join(F.broadcast(hot), "s", "left_anti")
     cand = (
         _pair_join(capped)
@@ -206,41 +206,12 @@ def ngram_jaccard_pairs(
             / (F.size("sh_a") + F.size("sh_b") - F.col("inter")).cast("double"),
         )
     )
-    return give_ownership(
-        verified.filter(F.col("jaccard") >= threshold).select(
-            "id_a", "id_b", "jaccard"
-        ),
-        [tok, inv, hot, sh],
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
 # -- shared banded-LSH candidate generation ----------------------------------
-
-def give_ownership(out: DataFrame, frames: list) -> DataFrame:
-    """Hand persisted `frames` to the caller on out._kgx_persisted — the
-    caller-owned cache-release contract (same as relations.sentence_facts).
-    Collects transitively: any frame that itself carries a _kgx_persisted
-    list contributes that list too, so intermediate producers can't strand
-    a cache behind one hop of composition."""
-    owned = []
-    for f in frames:
-        owned.append(f)
-        owned.extend(getattr(f, "_kgx_persisted", []))
-    out._kgx_persisted = owned
-    return out
-
-
-def propagate_ownership(src: DataFrame, out: DataFrame) -> DataFrame:
-    """Carry src's _kgx_persisted list onto out and return out. Any plain
-    DataFrame transformation silently strips the Python attribute, so EVERY
-    projection over a frame that owns caches must route through this helper
-    (not hand-copy the attribute) — otherwise the caches leak for the
-    session lifetime. No-op when src owns nothing."""
-    owned = getattr(src, "_kgx_persisted", [])
-    if owned:
-        out._kgx_persisted = owned
-    return out
-
 
 def candidate_pairs_from_buckets(
     buckets: DataFrame, max_bucket_size: int | None = None
@@ -263,10 +234,7 @@ def candidate_pairs_from_buckets(
     stays O(bucket). Buckets at or under the cap are unaffected.
 
     The capped path persists the bucket frame (read three ways: sizes /
-    small / hot); ownership passes to the caller on the returned frame's
-    `_kgx_persisted` list — the same release contract as
-    relations.sentence_facts — so long-lived sessions (bench passes,
-    multi-query drivers) can unpersist after consuming the pairs.
+    small / hot) through kgx.cache.
     """
 
     def _all_pairs(src: DataFrame) -> DataFrame:
@@ -288,7 +256,7 @@ def candidate_pairs_from_buckets(
     # permutations, hyperplane fold-dots — evaluates once. The frame is
     # slim by contract, so the footprint is the same rows the self-join
     # shuffles anyway.
-    buckets = buckets.persist()
+    buckets = cache.persist(buckets)
     sizes = buckets.groupBy("band", "key").agg(
         F.count(F.lit(1)).alias("bsz"), F.min("id").alias("bmin")
     )
@@ -298,10 +266,7 @@ def candidate_pairs_from_buckets(
     star_pairs = hot.filter(F.col("id") != F.col("bmin")).select(
         F.col("bmin").alias("id_a"), F.col("id").alias("id_b")
     )
-    return give_ownership(
-        _all_pairs(ok).unionByName(star_pairs).dropDuplicates(["id_a", "id_b"]),
-        [buckets],
-    )
+    return _all_pairs(ok).unionByName(star_pairs).dropDuplicates(["id_a", "id_b"])
 
 
 # -- MinHash + LSH ----------------------------------------------------------
@@ -388,20 +353,19 @@ def minhash_lsh_pairs(
     # input file layout (a single parquet file would otherwise pin this to
     # one task)
     # token arrays materialized before shingling — see ngram_jaccard_pairs
-    base = (
+    base = cache.persist(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
         .repartition(npart, "id")
         .select("id", tokens(F.lower(F.col("txt"))).alias("toks"))
-        .persist()
     )
     # persist barrier carries BOTH the shingle array (for verification) and
     # the per-shingle hashes: the k=32 permutation transforms then read a
     # materialized column instead of re-evaluating the hash expression per
     # permutation (Catalyst would inline it k times — 3x wall for md5)
-    sh = base.select(
-        "id",
-        shingles_from_tokens(F.col("toks"), n).alias("sh"),
-    ).select("id", "sh", shingle_hashes(F.col("sh"), hash_fn).alias("hs")).persist()
+    sh = cache.persist(
+        base.select("id", shingles_from_tokens(F.col("toks"), n).alias("sh"))
+        .select("id", "sh", shingle_hashes(F.col("sh"), hash_fn).alias("hs"))
+    )
     sig = sh.select("id", minhash_from_hashes(F.col("hs"), k).alias("sig"))
 
     # bucket rows carry only (id, band, key) — the shingle arrays never
@@ -436,9 +400,8 @@ def minhash_lsh_pairs(
             / (F.size("sh_a") + F.size("sh_b") - F.col("inter")).cast("double"),
         )
     )
-    return give_ownership(
-        verified.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard"),
-        [base, sh, cand],
+    return verified.filter(F.col("jaccard") >= threshold).select(
+        "id_a", "id_b", "jaccard"
     )
 
 
@@ -491,11 +454,10 @@ def simhash_fingerprints(
     # otherwise pin the whole fingerprint computation to one task
     npart = df.sparkSession.sparkContext.defaultParallelism
     # token arrays materialized before shingling — see ngram_jaccard_pairs
-    tok = (
+    tok = cache.persist(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
         .repartition(npart, "id")
         .select("id", tokens(F.lower(F.col("txt"))).alias("toks"))
-        .persist()
     )
     sh = tok.select("id", shingles_from_tokens(F.col("toks"), n).alias("sh"))
     hashed = sh.select("id", F.explode("sh").alias("s")).select(
@@ -523,12 +485,9 @@ def simhash_fingerprints(
         - F.col("n_sh")
         for i in range(n_bits)
     ]
-    return give_ownership(
-        grouped.select(
-            F.col("id").alias(id_col),
-            _simhash_from_counters(counters, n_bits).alias("simhash"),
-        ),
-        [tok],
+    return grouped.select(
+        F.col("id").alias(id_col),
+        _simhash_from_counters(counters, n_bits).alias("simhash"),
     )
 
 
@@ -548,7 +507,7 @@ def simhash_candidates(
     band_mask = (1 << band_bits) - 1
     # barrier: fp usually carries the (expensive) fingerprint expression;
     # without persist the self-join below inlines it into both sides
-    fp = fp.persist()
+    fp = cache.persist(fp)
     buckets = fp.select(
         F.col(id_col).alias("id"),
         F.explode(
@@ -568,7 +527,7 @@ def simhash_candidates(
     cand = candidate_pairs_from_buckets(buckets, max_bucket_size)
     fa = fp.select(F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"))
     fb = fp.select(F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"))
-    out = (
+    return (
         cand.join(fa, "id_a")
         .join(fb, "id_b")
         .select(
@@ -577,7 +536,6 @@ def simhash_candidates(
             F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).alias("hamming"),
         )
     )
-    return give_ownership(out, [fp, cand])
 
 
 # -- embedding near-dup -----------------------------------------------------
@@ -696,7 +654,7 @@ def embedding_neardup_pairs(
     cand = candidate_pairs_from_buckets(buckets, max_bucket_size)
     va = base.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a"))
     vb = base.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b"))
-    out = (
+    return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .withColumn(
@@ -730,7 +688,6 @@ def embedding_neardup_pairs(
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
-    return give_ownership(out, [cand])
 
 
 def _fold_dot(a: Column, b: Column) -> Column:
@@ -805,7 +762,7 @@ def semdedup(
         F.count(F.lit(1)).alias("n_dup_smaller"),
         F.max("cosine").alias("max_sim_smaller"),
     )
-    out = (
+    return (
         base.join(losers, base["id"] == losers["id_b"], "left")
         .select(
             F.col("id").alias(id_col),
@@ -817,7 +774,6 @@ def semdedup(
             (F.col("n_dup_smaller").isNull()).alias("is_kept"),
         )
     )
-    return give_ownership(out, getattr(cand, "_kgx_persisted", []))
 
 
 def dup_substring_coverage(
@@ -868,10 +824,9 @@ def dup_substring_coverage(
     # over the corpus — the same recompute smell the phrase-edge audit
     # caught in r4. Rows are slim (doc_id, n_tokens, pos, h): the same
     # volume the frequency shuffle moves anyway.
-    pos = (
+    pos = cache.persist(
         base.select("doc_id", "n_tokens", F.posexplode("shl").alias("pos", "s"))
         .select("doc_id", "n_tokens", "pos", md5_hash60(F.col("s")).alias("h"))
-        .persist()
     )
     dup_h = (
         pos.groupBy("h")
@@ -879,7 +834,7 @@ def dup_substring_coverage(
         .filter(F.col("dmin") < F.col("dmax"))
         .select("h")
     )
-    dup_pos = pos.join(dup_h, "h").persist()
+    dup_pos = cache.persist(pos.join(dup_h, "h"))
     dup_counts = dup_pos.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_dup_positions")
     )
@@ -903,7 +858,7 @@ def dup_substring_coverage(
         F.max("n_tokens").alias("n_tokens"),
         F.count(F.lit(1)).alias("n_shingles"),
     )
-    out = (
+    return (
         totals.join(dup_counts, "doc_id", "left")
         .join(covered, "doc_id", "left")
         .select(
@@ -922,7 +877,6 @@ def dup_substring_coverage(
             ).alias("dup_fraction"),
         )
     )
-    return give_ownership(out, [pos, dup_pos])
 
 
 def containment_pairs(
@@ -953,16 +907,14 @@ def containment_pairs(
     intersection computation per unordered pair; both directions emit
     from it (in-row explode, no second join)."""
     npart = df.sparkSession.sparkContext.defaultParallelism
-    tok = (
+    tok = cache.persist(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("txt"))
         .repartition(npart, "id")
         .select("id", tokens(F.lower(F.col("txt"))).alias("toks"))
-        .persist()
     )
-    sh = (
+    sh = cache.persist(
         tok.select("id", shingles_from_tokens(F.col("toks"), n).alias("sh"))
         .withColumn("n_sh", F.size("sh"))
-        .persist()
     )
     inv = sh.select("id", F.explode("sh").alias("s"))
     if max_df is not None:
@@ -973,7 +925,7 @@ def containment_pairs(
             .select("s")
         )
         inv = inv.join(F.broadcast(hot), "s", "left_anti")
-    inv = inv.persist()
+    inv = cache.persist(inv)
     a, b = inv.alias("a"), inv.alias("b")
     cand = (
         a.join(b, on=[F.col("a.s") == F.col("b.s"), F.col("a.id") < F.col("b.id")])
@@ -993,7 +945,7 @@ def containment_pairs(
         )
     )
     t = float(threshold)
-    both = v.select(
+    return v.select(
         F.explode(
             F.array(
                 F.struct(
@@ -1011,4 +963,3 @@ def containment_pairs(
             )
         ).alias("r")
     ).select("r.*").filter(F.col("containment") >= t)
-    return give_ownership(both, [tok, sh, inv])

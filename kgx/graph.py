@@ -25,6 +25,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from kgx import cache
+
 R0 = 10**12  # integer rank mass per node (exact across engines)
 
 
@@ -70,16 +72,10 @@ def pagerank_int(edges: DataFrame, iters: int = 3, r0: int = R0) -> DataFrame:
     + one groupBy(dst) — two exchanges, both on node keys; skewed hubs
     are split by AQE. Edges are persisted once; rank tables are tiny
     relative to edges and never hold floats.
-
-    RELEASE OBLIGATION: the result carries persisted intermediates on
-    ``result._kgx_persisted`` (see dedup.give_ownership). After consuming
-    the result, the caller must ``unpersist()`` each frame in that list,
-    or the edge/degree caches pin executor memory for the session.
-    Projections over the result must go through
-    ``dedup.propagate_ownership`` or the list is silently stripped.
     """
-    edges = edges.repartition(edges.sparkSession.sparkContext.defaultParallelism, "src").persist()
-    deg = degrees(edges).persist()
+    npart = edges.sparkSession.sparkContext.defaultParallelism
+    edges = cache.persist(edges.repartition(npart, "src"))
+    deg = cache.persist(degrees(edges))
     base = (15 * r0) // 100
     ranks = deg.select("src", F.lit(r0).cast("bigint").alias("r"), "deg")
     for _ in range(iters):
@@ -92,13 +88,7 @@ def pagerank_int(edges: DataFrame, iters: int = 3, r0: int = R0) -> DataFrame:
             (F.lit(base) + F.expr("(85 * coalesce(s, 0)) div 100")).cast("bigint").alias("r"),
             deg["deg"],
         )
-    out = ranks.select(F.col("src").alias("node"), F.col("r").alias("rank"))
-    # edges/deg are read once per iteration when `out` finally executes;
-    # unpersisting here (before materialization) would silently discard the
-    # cache. Caller owns the unpersist after consuming the result — same
-    # contract as relations.sentence_facts / triangle_counts.
-    out._kgx_persisted = [edges, deg]
-    return out
+    return ranks.select(F.col("src").alias("node"), F.col("r").alias("rank"))
 
 
 def two_hop_counts(edges: DataFrame, sources: DataFrame) -> DataFrame:
@@ -146,16 +136,13 @@ def jaccard_similarity(
 
     Returns (a, b, n_common, deg_a, deg_b, jaccard) with a < b; jaccard
     is one correctly-rounded double division (deterministic cross-engine).
-
-    RELEASE OBLIGATION: carries persisted intermediates on
-    ``result._kgx_persisted``; the caller unpersists after consuming.
     """
-    edges = edges.persist()
+    edges = cache.persist(edges)
     deg = degrees(edges)
     mid = deg.where(F.col("deg") <= max_middle_degree).select("src")
     # wedge legs restricted to capped middles; persisted because the
     # self-join reads it twice
-    nbr = edges.join(F.broadcast(mid), "src").persist()
+    nbr = cache.persist(edges.join(F.broadcast(mid), "src"))
     wedges = (
         nbr.select(F.col("src"), F.col("dst").alias("a"))
         .join(nbr.select(F.col("src"), F.col("dst").alias("b")), "src")
@@ -168,7 +155,7 @@ def jaccard_similarity(
     )
     da = deg.select(F.col("src").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("src").alias("b"), F.col("deg").alias("deg_b"))
-    out = (
+    return (
         common.join(F.broadcast(da), "a")
         .join(F.broadcast(db), "b")
         .select(
@@ -185,8 +172,6 @@ def jaccard_similarity(
             ).alias("jaccard"),
         )
     )
-    out._kgx_persisted = [edges, nbr]
-    return out
 
 
 def copurchase_edges(pairs: DataFrame, key: str, node: str, min_support: int = 2) -> DataFrame:
@@ -228,25 +213,20 @@ def triangle_counts(edges_uv: DataFrame) -> DataFrame:
 
     Orientation does not change the triangle set, so a plain u<v<w
     3-way-join SQL oracle counts the same triangles.
-
-    RELEASE OBLIGATION: the result carries persisted intermediates on
-    ``result._kgx_persisted``; the caller must unpersist them after
-    consuming the result, and any projection over the result must route
-    through ``dedup.propagate_ownership`` (see dedup.give_ownership).
     """
     # the edge list feeds degree counting AND orientation — persist it
     # once or every reference replays its upstream plan (for a projection
     # input that is a full self-join, a multiplicative re-scan)
-    edges_uv = edges_uv.persist()
+    edges_uv = cache.persist(edges_uv)
     sym = edges_uv.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges_uv.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
     deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
     dsrc = deg.select(F.col("src").alias("u"), F.col("deg").alias("du"))
     ddst = deg.select(F.col("src").alias("v"), F.col("deg").alias("dv"))
-    # degree tables are O(|V|) — broadcast; AQE demotes if the estimate
-    # is wrong at real scale
-    oriented = (
+    # the degree tables are O(|V|) and broadcast by explicit hint, which
+    # AQE never demotes, whatever their size
+    oriented = cache.persist(
         edges_uv.join(F.broadcast(dsrc), "u")
         .join(F.broadcast(ddst), "v")
         .select(
@@ -259,7 +239,6 @@ def triangle_counts(edges_uv: DataFrame) -> DataFrame:
             .alias("e")
         )
         .select("e.a", "e.b")
-        .persist()
     )
     wedges = oriented.join(
         oriented.select(F.col("a").alias("b"), F.col("b").alias("c")), "b"
@@ -272,12 +251,9 @@ def triangle_counts(edges_uv: DataFrame) -> DataFrame:
         .unionAll(tri.select(F.col("b").alias("node")))
         .unionAll(tri.select(F.col("c").alias("node")))
     )
-    out = corners.groupBy("node").agg(F.count("*").alias("n_triangles"))
     # oriented is read three times (both wedge sides + the closing
-    # semi-check); the persist barrier computes it once. Caller owns the
-    # unpersist, same contract as relations.sentence_facts.
-    out._kgx_persisted = [edges_uv, oriented]
-    return out
+    # semi-check); the persist barrier computes it once
+    return corners.groupBy("node").agg(F.count("*").alias("n_triangles"))
 
 
 def negative_samples(
@@ -314,7 +290,7 @@ def negative_samples(
     """
     from kgx.dedup import md5_hash60
 
-    pos = pos.select(left, right).distinct().persist()
+    pos = cache.persist(pos.select(left, right).distinct())
     ranks = entities.select(
         F.col(right),
         F.row_number().over(Window.orderBy(right)).alias("rnk"),
@@ -349,14 +325,12 @@ def negative_samples(
         .select(left, right, "neg_idx")
         .join(pos, [left, right], "left_anti")
     )
-    out = pos.select(
+    return pos.select(
         F.col(left),
         F.col(right),
         F.lit(1).alias("label"),
         F.lit(0).alias("neg_idx"),
     ).unionByName(neg.withColumn("label", F.lit(0)).select(left, right, "label", "neg_idx"))
-    out._kgx_persisted = [pos]
-    return out
 
 
 def random_walks(
@@ -401,14 +375,13 @@ def random_walks(
     base = edges.select("src", "dst")
     if not edges_unique:
         base = base.distinct()
-    adj = (
+    adj = cache.persist(
         base.select(
             "src",
             "dst",
             (F.row_number().over(per_src.orderBy("dst")) - 1).alias("nbr"),
             F.count("*").over(per_src).alias("deg"),
         )
-        .persist()
     )
     cur = (
         adj.select("src")
@@ -422,22 +395,18 @@ def random_walks(
         .withColumn("node", F.col("start"))
     )
     out = cur.withColumn("step", F.lit(0))
-    persisted = [adj]
     for step in range(1, walk_len):
         pick = md5_hash60(
             F.concat_ws(
                 ":", F.col("start"), F.col("walk_id").cast("string"), F.lit(str(step))
             )
         )
-        cur = (
+        cur = cache.persist(
             cur.join(adj, cur["node"] == adj["src"])
             .where(F.col("nbr") == pick % F.col("deg"))
             .select("start", "walk_id", F.col("dst").alias("node"))
-            .persist()
         )
-        persisted.append(cur)
         out = out.unionByName(cur.withColumn("step", F.lit(step)))
-    out._kgx_persisted = persisted
     return out
 
 
@@ -498,11 +467,8 @@ def resource_allocation(
     partial sums; the degree dim is O(|V|) and broadcast.
 
     Returns (a, b, n_common, ra_scaled, ra) with a < b.
-
-    RELEASE OBLIGATION: carries persisted intermediates on
-    ``result._kgx_persisted``; the caller unpersists after consuming.
     """
-    edges = edges.persist()
+    edges = cache.persist(edges)
     deg = degrees(edges)
     mid = deg.where(F.col("deg") <= max_middle_degree).withColumn(
         "contrib", F.expr(f"CAST({scale} AS BIGINT) div deg")
@@ -510,13 +476,13 @@ def resource_allocation(
     # wedge legs restricted to capped middles, each leg carrying the
     # middle's own 1/deg contribution; persisted — the self-join reads
     # it twice
-    nbr = edges.join(F.broadcast(mid), "src").persist()
+    nbr = cache.persist(edges.join(F.broadcast(mid), "src"))
     wedges = (
         nbr.select("src", F.col("dst").alias("a"), "contrib")
         .join(nbr.select("src", F.col("dst").alias("b")), "src")
         .where(F.col("a") < F.col("b"))
     )
-    out = (
+    return (
         wedges.groupBy("a", "b")
         .agg(
             F.count(F.lit(1)).alias("n_common"),
@@ -531,8 +497,6 @@ def resource_allocation(
             (F.col("ra_scaled").cast("double") / F.lit(float(scale))).alias("ra"),
         )
     )
-    out._kgx_persisted = [edges, nbr]
-    return out
 
 
 def transitive_closure(
@@ -624,20 +588,16 @@ def landmark_distances(
         .select(F.col("src").alias("landmark"))
     )
     level = landmarks.select("landmark", F.col("landmark").alias("node"))
-    seen = level.withColumn("dist", F.lit(0).cast("int")).persist()
-    persisted = [seen]
+    seen = cache.persist(level.withColumn("dist", F.lit(0).cast("int")))
     for d in range(1, max_depth + 1):
-        frontier = (
+        frontier = cache.persist(
             level.join(edges, level["node"] == edges["src"])
             .select("landmark", F.col("dst").alias("node"))
             .distinct()
             .join(seen.select("landmark", "node"), ["landmark", "node"], "left_anti")
-            .persist()
         )
-        persisted.append(frontier)
         seen = seen.unionByName(frontier.withColumn("dist", F.lit(d).cast("int")))
         level = frontier
-    seen._kgx_persisted = persisted
     return seen
 
 
@@ -657,12 +617,8 @@ def kcore(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     against the O(|V|) survivor set — all shuffles on node keys, edges
     persisted per round so round r+1 never recomputes round r. Returns
     the surviving (node, deg) table (degree within the k-core subgraph).
-
-    RELEASE OBLIGATION: persisted per-round edge frames ride on
-    ``result._kgx_persisted``; the caller unpersists after consuming.
     """
-    cur = edges.select("src", "dst").persist()
-    persisted = [cur]
+    cur = cache.persist(edges.select("src", "dst"))
     for _ in range(rounds):
         keep = (
             cur.groupBy("src")
@@ -670,18 +626,14 @@ def kcore(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
             .where(F.col("deg") >= k)
             .select("src")
         )
-        cur = (
+        cur = cache.persist(
             cur.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
             .select("src", "dst")
-            .persist()
         )
-        persisted.append(cur)
-    out = cur.groupBy("src").agg(F.count("*").alias("deg")).select(
+    return cur.groupBy("src").agg(F.count("*").alias("deg")).select(
         F.col("src").alias("node"), "deg"
     )
-    out._kgx_persisted = persisted
-    return out
 
 
 def ppr_int(
@@ -703,20 +655,16 @@ def ppr_int(
     pagerank_int (edges persisted once, two node-key exchanges per
     iteration); `seeds` is a 1-column (src) frame, broadcast-joined onto
     the degree table once.
-
-    RELEASE OBLIGATION: ``result._kgx_persisted`` as in pagerank_int.
     """
-    edges = edges.repartition(
-        edges.sparkSession.sparkContext.defaultParallelism, "src"
-    ).persist()
-    deg = (
+    npart = edges.sparkSession.sparkContext.defaultParallelism
+    edges = cache.persist(edges.repartition(npart, "src"))
+    deg = cache.persist(
         degrees(edges)
         .join(
             F.broadcast(seeds.select("src").distinct().withColumn("is_seed", F.lit(1))),
             "src",
             "left",
         )
-        .persist()
     )
     base = (15 * r0) // 100
     base_col = F.when(F.col("is_seed").isNotNull(), F.lit(base)).otherwise(F.lit(0))
@@ -742,9 +690,7 @@ def ppr_int(
             deg["deg"],
             deg["is_seed"],
         )
-    out = ranks.select(F.col("src").alias("node"), F.col("r").alias("rank"))
-    out._kgx_persisted = [edges, deg]
-    return out
+    return ranks.select(F.col("src").alias("node"), F.col("r").alias("rank"))
 
 
 def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
@@ -774,17 +720,12 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     never over raw neighbor rows. Labels persisted per round; O(rounds)
     jobs, O(|E|) rows moved per round, reducer state bounded by a node's
     DISTINCT neighbor-label count.
-
-    RELEASE OBLIGATION: per-round label frames ride on
-    ``result._kgx_persisted``; the caller unpersists after consuming.
     """
-    labels = (
+    labels = cache.persist(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .persist()
     )
-    persisted = [labels]
     w = Window.partitionBy("node").orderBy(
         F.col("cnt").desc(), F.col("label").asc()
     )
@@ -793,16 +734,12 @@ def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
             labels.withColumnRenamed("node", "dst"), "dst"
         ).select(F.col("src").alias("node"), "label")
         counted = nbr.groupBy("node", "label").agg(F.count("*").alias("cnt"))
-        labels = (
+        labels = cache.persist(
             counted.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("node", "label")
-            .persist()
         )
-        persisted.append(labels)
-    out = labels.select("node", F.col("label").alias("community"))
-    out._kgx_persisted = persisted
-    return out
+    return labels.select("node", F.col("label").alias("community"))
 
 
 def hits_int(edges: DataFrame, iters: int = 2) -> DataFrame:
@@ -830,35 +767,29 @@ def hits_int(edges: DataFrame, iters: int = 2) -> DataFrame:
     Shape per iteration: one join of the O(|V|) score table onto the
     persisted edge list + one groupBy on the opposite endpoint — two
     exchanges on node keys with map-side partial sums; AQE splits skewed
-    hubs. Score tables are persisted per step and released via
-    ``result._kgx_persisted`` (caller unpersists)."""
-    edges = edges.select("src", "dst").persist()
-    nodes = (
+    hubs. Score tables are persisted per step."""
+    edges = cache.persist(edges.select("src", "dst"))
+    nodes = cache.persist(
         edges.select(F.col("src").alias("node"))
         .union(edges.select("dst"))
         .distinct()
-        .persist()
     )
-    persisted = [edges, nodes]
     h = nodes.select("node", F.lit(1).cast("long").alias("s"))
     a = None
     for _ in range(iters):
-        a = (
+        a = cache.persist(
             edges.join(h.withColumnRenamed("node", "src"), "src")
             .groupBy("dst")
             .agg(F.sum("s").alias("s"))
             .withColumnRenamed("dst", "node")
-            .persist()
         )
-        h = (
+        h = cache.persist(
             edges.join(a.withColumnRenamed("node", "dst"), "dst")
             .groupBy("src")
             .agg(F.sum("s").alias("s"))
             .withColumnRenamed("src", "node")
-            .persist()
         )
-        persisted.extend([a, h])
-    out = (
+    return (
         nodes.join(h.withColumnRenamed("s", "hub"), "node", "left")
         .join(a.withColumnRenamed("s", "auth"), "node", "left")
         .select(
@@ -867,8 +798,6 @@ def hits_int(edges: DataFrame, iters: int = 2) -> DataFrame:
             F.coalesce("auth", F.lit(0)).cast("long").alias("auth"),
         )
     )
-    out._kgx_persisted = persisted
-    return out
 
 
 def modularity(edges: DataFrame, communities: DataFrame) -> DataFrame:
@@ -960,8 +889,7 @@ def ktruss(edges_uv: DataFrame, k: int, rounds: int = 2) -> DataFrame:
 
     Per-round edge sets are localCheckpoint'ed (eager) — the fixpoint
     lineage-truncation contract shared with canonical.connected_components;
-    per-round oriented frames ride on ``result._kgx_persisted`` for the
-    caller to unpersist after consuming.
+    per-round oriented frames are persisted through kgx.cache.
 
     Raises ValueError for k < 3: below that an edge in zero triangles
     should survive, but it never reaches the support table.
@@ -969,7 +897,6 @@ def ktruss(edges_uv: DataFrame, k: int, rounds: int = 2) -> DataFrame:
     if k < 3:
         raise ValueError(f"ktruss needs k >= 3, got {k}")
     cur = edges_uv.select("u", "v")
-    persisted = []
     last_sup = None
     for _ in range(rounds):
         # truncate lineage per round (canonical.py's fixpoint pattern):
@@ -985,7 +912,7 @@ def ktruss(edges_uv: DataFrame, k: int, rounds: int = 2) -> DataFrame:
         deg = sym.groupBy("src").agg(F.count("*").alias("deg"))
         dsrc = deg.select(F.col("src").alias("u"), F.col("deg").alias("du"))
         ddst = deg.select(F.col("src").alias("v"), F.col("deg").alias("dv"))
-        oriented = (
+        oriented = cache.persist(
             cur.join(F.broadcast(dsrc), "u")
             .join(F.broadcast(ddst), "v")
             .select(
@@ -998,9 +925,7 @@ def ktruss(edges_uv: DataFrame, k: int, rounds: int = 2) -> DataFrame:
                 .alias("e")
             )
             .select("e.a", "e.b")
-            .persist()
         )
-        persisted.append(oriented)
         wedges = oriented.join(
             oriented.select(F.col("a").alias("b"), F.col("b").alias("c")), "b"
         )
@@ -1021,11 +946,9 @@ def ktruss(edges_uv: DataFrame, k: int, rounds: int = 2) -> DataFrame:
         cur = sup.where(F.col("support") >= k - 2)
         last_sup = cur
         cur = cur.select("u", "v")
-    out = last_sup if last_sup is not None else edges_uv.select(
+    return last_sup if last_sup is not None else edges_uv.select(
         "u", "v", F.lit(None).cast("bigint").alias("support")
     )
-    out._kgx_persisted = persisted
-    return out
 
 
 def harmonic_closeness(
@@ -1055,8 +978,6 @@ def harmonic_closeness(
 
     Returns (node, n_reached, harmonic_scaled, harmonic).
     """
-    from kgx import dedup as _dedup
-
     dists = landmark_distances(edges, n_landmarks=n_landmarks, max_depth=max_depth)
     contrib = dists.where(F.col("dist") >= 1).select(
         "node", F.expr("1000000000000 div dist").cast("bigint").alias("c")
@@ -1065,13 +986,12 @@ def harmonic_closeness(
         F.count("*").alias("n_reached"),
         F.sum("c").cast("bigint").alias("harmonic_scaled"),
     )
-    out = out.select(
+    return out.select(
         "node",
         "n_reached",
         "harmonic_scaled",
         (F.col("harmonic_scaled").cast("double") / F.lit(1.0e12)).alias("harmonic"),
     )
-    return _dedup.propagate_ownership(dists, out)
 
 
 def clustering_coefficient(edges_uv: DataFrame) -> DataFrame:
@@ -1086,12 +1006,7 @@ def clustering_coefficient(edges_uv: DataFrame) -> DataFrame:
     orientation, O(E^1.5)) plus one degree groupBy and a node-keyed
     left join — at 10^9 edges both shuffle on node keys and the degree
     side is |V|-bounded.
-
-    RELEASE OBLIGATION: rides triangle_counts' persisted frames on
-    ``result._kgx_persisted``.
     """
-    from kgx import dedup as _dedup
-
     tri = triangle_counts(edges_uv)
     sym = edges_uv.select(F.col("u").alias("node"), F.col("v").alias("o")).unionAll(
         edges_uv.select(F.col("v").alias("node"), F.col("u").alias("o"))
@@ -1102,7 +1017,7 @@ def clustering_coefficient(edges_uv: DataFrame) -> DataFrame:
         F.col("deg").cast("bigint").alias("deg"),
         F.coalesce("n_triangles", F.lit(0)).cast("bigint").alias("n_triangles"),
     )
-    out = j.select(
+    return j.select(
         "node",
         "deg",
         "n_triangles",
@@ -1114,4 +1029,3 @@ def clustering_coefficient(edges_uv: DataFrame) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("clustering"),
     )
-    return _dedup.propagate_ownership(tri, out)

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from kgx import (
     aggregate,
     assemble,
+    cache,
     canonical,
     lineage,
     materialize,
@@ -127,7 +128,9 @@ def run_pipeline(
             )
 
     # -- stage: extract (assemble + mentions + relations): six writes, each
-    #    its own Spark jobs (~35 in all) over one persisted span frame ------
+    #    its own Spark jobs (~35 in all) over one persisted span frame; the
+    #    scope releases every cache the stage made when it returns --------
+    @cache.scope()
     def write_extract() -> None:
         # map-only admission (no full-text shuffle). Scan split planning
         # (spark.sql.files.maxPartitionBytes) controls parallelism; set
@@ -136,13 +139,13 @@ def run_pipeline(
         turns = assemble.admit_turns(transcripts, max_text_len=max_text_len)
         if num_partitions:
             turns = turns.repartition(num_partitions)
-        turns = turns.persist()
+        turns = cache.persist(turns)
         # one Arrow pass: the span UDF runs once per admitted turn, and
         # its slim output — duplicate (conv_id, turn_idx) rows already
         # resolved — is persisted and feeds every output below
-        spans = mentions_mod.resolved_mentions(
-            mentions_mod.detect_mentions(turns, kb)
-        ).persist()
+        spans = cache.persist(
+            mentions_mod.resolved_mentions(mentions_mod.detect_mentions(turns, kb))
+        )
         facts, turn_feats = relations.sentence_facts(spans, kb)
         facts.write.mode("overwrite").partitionBy("ts_day").parquet(paths["facts"])
         turn_feats.select(
@@ -172,10 +175,6 @@ def run_pipeline(
         mentions_mod.carryover_from_so(so).write.mode("overwrite").parquet(
             paths["carryover"]
         )
-        # release everything this stage pinned: the admitted turns, the
-        # span frame and the slim intermediates of the facts and edges
-        for cached in [turns, spans, *facts._kgx_persisted, *pe._kgx_persisted]:
-            cached.unpersist()
 
     run("extract", write_extract)
 

@@ -18,7 +18,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from kgx import assemble, mentions
+from kgx import assemble, cache, mentions
 
 
 def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -286,18 +286,18 @@ def phrase_fact_edges(facts: DataFrame, turns_with_mentions: DataFrame, kb) -> D
     # below derive from it, and without the cache each branch re-executes
     # the Arrow mention-detection stage upstream (plan audit showed 9
     # ArrowEvalPython nodes in the finalized plan; with the cache, 1).
-    # RELEASE OBLIGATION: the returned frame carries the cache in
-    # _kgx_persisted — callers done with the edges should unpersist those.
-    ev = mentions.resolved_mentions(turns_with_mentions).select(
-        "conv_id", "turn_idx", F.explode("mentions").alias("m")
-    ).select(
-        "conv_id",
-        "turn_idx",
-        F.col("m.begin").alias("begin"),
-        F.col("m.end").alias("end"),
-        F.col("m.kind").alias("kind"),
-        F.col("m.surface").alias("surface"),
-    ).persist()
+    ev = cache.persist(
+        mentions.resolved_mentions(turns_with_mentions)
+        .select("conv_id", "turn_idx", F.explode("mentions").alias("m"))
+        .select(
+            "conv_id",
+            "turn_idx",
+            F.col("m.begin").alias("begin"),
+            F.col("m.end").alias("end"),
+            F.col("m.kind").alias("kind"),
+            F.col("m.surface").alias("surface"),
+        )
+    )
     f = facts.select(
         "conv_id", "turn_idx", "ts_day", "entity_name", "pred", "indicator_uri"
     ).withColumn("_ename_lc", F.lower("entity_name"))
@@ -353,13 +353,11 @@ def phrase_fact_edges(facts: DataFrame, turns_with_mentions: DataFrame, kb) -> D
         .select(*out_cols, F.lit("indicator").alias("role"))
     )
 
-    out = (
+    return (
         subject_edges.unionByName(orientation_edges)
         .unionByName(feature_edges)
         .unionByName(indicator_edges)
     )
-    out._kgx_persisted = [ev]
-    return out
 
 
 def document_meta(turns: DataFrame) -> DataFrame:

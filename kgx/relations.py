@@ -33,7 +33,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from kgx import linking, mentions
+from kgx import cache, linking, mentions
 from kgx.resources import KnowledgeBase
 
 _NS = "http://kgx.example.org/onto#"
@@ -202,7 +202,7 @@ def indirect_facts(turn_feats: DataFrame, linked_entities: DataFrame, ind_dim: D
 
 
 def facts_from_turn_features(
-    tf: DataFrame, kb: KnowledgeBase, persist: bool = True
+    tf: DataFrame, kb: KnowledgeBase
 ) -> tuple[DataFrame, DataFrame]:
     """Stage-3 wiring from a slim turn_feats DataFrame. Returns
     (sentence_facts, turn_feats).
@@ -212,44 +212,35 @@ def facts_from_turn_features(
 
     turn_feats and linked entities are each the input of 2+ branches;
     persisting them keeps the Arrow-UDF stage from re-executing once per
-    branch (Spark does no cross-branch subplan dedup).
+    branch (Spark does no cross-branch subplan dedup). In kgx.job only the
+    facts and turn_feats writes read them (phrase_edges reads the written
+    facts).
     """
     spark = tf.sparkSession
     gaz = linking.gazetteer_dim(spark, kb)
     alias = linking.feature_alias_dim(spark, kb)
     ind = linking.indicators_dim(spark, kb)
 
-    if persist:
-        tf = tf.persist()
-    linked = linked_turn_entities(tf, gaz)
-    if persist:
-        linked = linked.persist()
+    tf = cache.persist(tf)
+    linked = cache.persist(linked_turn_entities(tf, gaz))
     direct = direct_facts(linked, alias)
     indirect = indirect_facts(tf, linked, ind)
-    facts = direct.unionByName(indirect)
-    # hand the persisted intermediates to the caller so long-lived sessions
-    # (tests, benchmarks, repeated run_pipeline calls) can release executor
-    # cache once the facts are materialized; in kgx.job only the facts and
-    # turn_feats writes read them (phrase_edges reads the written facts)
-    facts._kgx_persisted = [tf, linked] if persist else []
-    return facts, tf
+    return direct.unionByName(indirect), tf
 
 
 def extract_facts(
-    turns: DataFrame, kb: KnowledgeBase, persist: bool = True
+    turns: DataFrame, kb: KnowledgeBase
 ) -> tuple[DataFrame, DataFrame]:
     """Assemble-output turns → facts, for callers that do not keep the
     mention spans; use sentence_facts when you already have them."""
-    return sentence_facts(mentions.detect_mentions(turns, kb), kb, persist=persist)
+    return sentence_facts(mentions.detect_mentions(turns, kb), kb)
 
 
 def sentence_facts(
-    turns_with_mentions: DataFrame, kb: KnowledgeBase, persist: bool = True
+    turns_with_mentions: DataFrame, kb: KnowledgeBase
 ) -> tuple[DataFrame, DataFrame]:
     """Stage-3 wiring from a full-mention DataFrame (evidence path)."""
-    return facts_from_turn_features(
-        turn_features(turns_with_mentions), kb, persist=persist
-    )
+    return facts_from_turn_features(turn_features(turns_with_mentions), kb)
 
 
 def drop_invalid_convs(facts: DataFrame) -> DataFrame:

@@ -217,10 +217,7 @@ def curate_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs, and the only text scans are the ones inside the component ops."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     contam = curate_contamination(spark, sf_dir).select("doc_id", "contaminated")
-    # keep the RAW return: .select() builds a new DataFrame object and would
-    # strip the _kgx_persisted ownership list (a silent cache leak)
-    canon_raw = dedup_canonical_docs(spark, sf_dir)
-    canon = canon_raw.select("doc_id", "keep_id")
+    canon = dedup_canonical_docs(spark, sf_dir).select("doc_id", "keep_id")
     quality = text_quality(spark, sf_dir).select("doc_id", "quality_flag")
     samp = (
         curate_stratified_sample(spark, sf_dir)
@@ -238,14 +235,13 @@ def curate_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("sampled").isNull(), F.lit("not_sampled"))
         .otherwise(F.lit("kept"))
     )
-    out = (
+    return (
         docs.join(contam, "doc_id", "left")
         .join(canon, "doc_id", "left")
         .join(quality, "doc_id", "left")
         .join(samp, "doc_id", "left")
         .select("doc_id", "lang", status.alias("status"))
     )
-    return dedup.propagate_ownership(canon_raw, out)
 CURATE_KEEP_SQL = f"""
 WITH contam AS ({CURATE_CONTAM_SQL}),
 canon AS ({DEDUP_CANON_SQL}),

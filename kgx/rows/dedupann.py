@@ -137,10 +137,9 @@ def dedup_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_b").cast("long").alias("src"), F.col("id_a").cast("long").alias("dst")
     )
     cc = canonical.connected_components(nodes, edges)
-    out = cc.select(
+    return cc.select(
         F.col("entity_id").alias("doc_id"), F.col("canonical_id").alias("keep_id")
     )
-    return dedup.propagate_ownership(pairs, out)
 DEDUP_CANON_SQL = f"""
 WITH RECURSIVE pairs AS ({DEDUP_NGRAM_SQL}),
 nodes AS (SELECT id_a AS id FROM pairs UNION SELECT id_b FROM pairs),
@@ -245,8 +244,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), n_bits=60, hash_fn=dedup.md5_hash60
     )
     cand = dedup.simhash_candidates(fp, n_bits=60)
-    out = cand.filter(F.col("hamming") <= 16)
-    return dedup.propagate_ownership(cand, out)
+    return cand.filter(F.col("hamming") <= 16)
 def _simhash_sql() -> str:
     sums = ",\n         ".join(
         f"sum(((h >> {i}) & 1) * 2 - 1) AS c{i}" for i in range(60)

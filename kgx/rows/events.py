@@ -568,10 +568,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     edges = graph.copurchase_edges(pairs, "o_custkey", "l_suppkey", min_support=2)
     counts = graph.triangle_counts(edges)
-    res = counts.select(F.col("node").cast("bigint").alias("suppkey"), "n_triangles")
-    # propagate cache ownership through the projection so the consumer
-    # (bench/driver loop) can release the persisted edge/orientation frames
-    return dedup.propagate_ownership(counts, res)
+    return counts.select(F.col("node").cast("bigint").alias("suppkey"), "n_triangles")
 GRAPH_TRIANGLES_SQL = """
 WITH m AS (
   SELECT DISTINCT o_custkey AS k, l_suppkey AS n
@@ -875,9 +872,7 @@ def graph_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cust_supp_edges(spark, sf_dir), walk_len=4, walks_per_node=2,
         edges_unique=True,
     )
-    return dedup.propagate_ownership(
-        walks, graph.skipgram_pairs(walks, window=2)
-    )
+    return graph.skipgram_pairs(walks, window=2)
 GRAPH_SKIPGRAM_SQL = f"""
 WITH {_WALK_CTES}
 SELECT a.node AS center, b.node AS context, count(*) AS cnt
@@ -1216,10 +1211,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     modularity formula. Global Q = sum(contribution)."""
     edges = _cust_supp_edges(spark, sf_dir)
     labels = graph.label_propagation(edges, rounds=_LPA_ROUNDS)
-    out = graph.modularity(edges, labels)
-    from kgx import dedup as _dedup
-
-    return _dedup.propagate_ownership(labels, out)
+    return graph.modularity(edges, labels)
 GRAPH_MODULARITY_SQL = f"""
 WITH {_GRAPH_EDGE_CTE},
 l0 AS (SELECT DISTINCT src AS node, src AS label FROM und),
@@ -1281,12 +1273,11 @@ def graph_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs, "l_orderkey", "l_partkey", min_support=1
     )
     out = graph.ktruss(edges, k=_KTRUSS_K, rounds=_KTRUSS_ROUNDS)
-    res = out.select(
+    return out.select(
         F.col("u").cast("bigint").alias("u"),
         F.col("v").cast("bigint").alias("v"),
         F.col("support").cast("bigint").alias("support"),
     )
-    return dedup.propagate_ownership(out, res)
 _KTRUSS_STEP = """
 t{i} AS (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
@@ -1505,13 +1496,12 @@ def graph_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs, "l_orderkey", "l_partkey", min_support=1
     )
     out = graph.clustering_coefficient(edges)
-    res = out.select(
+    return out.select(
         F.col("node").cast("bigint").alias("partkey"),
         "deg",
         "n_triangles",
         "clustering",
     )
-    return dedup.propagate_ownership(out, res)
 GRAPH_CLUSTERING_SQL = """
 WITH m AS (SELECT DISTINCT l_orderkey AS k, l_partkey AS n FROM lineitem),
 e AS (

@@ -55,9 +55,15 @@ def _kg_run(spark: SparkSession, sf_dir: str):
     hit = _KG_CACHE.get(key)
     if hit is not None and hit[0] is spark and _session_alive(spark):
         return hit[1], hit[2]
-    kb = resources.driver_kb()
     turns = assemble.assemble_turns(_doc_transcripts(spark, sf_dir), num_partitions=32)
-    facts, tf = relations.extract_facts(turns, kb)
+    return _kg_memo(key, spark, turns)
+def _kg_memo(key, spark: SparkSession, turns: DataFrame):
+    """Extract facts and turn_feats from `turns` and memoize both. They
+    are session-lifetime caches by design, so they are persisted plainly,
+    never through kgx.cache: a caller's cache scope must not release them."""
+    kb = resources.driver_kb()
+    tf = relations.turn_features(mentions.detect_mentions(turns, kb)).persist()
+    facts, tf = relations.facts_from_turn_features(tf, kb)
     facts = facts.persist()
     _KG_CACHE[key] = (spark, facts, tf)
     return facts, tf
@@ -752,7 +758,7 @@ def kg_phrase_fact_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = assemble.admit_turns(_doc_transcripts(spark, sf_dir))
     wm = mentions.detect_mentions(tr, kb)
     edges = materialize.phrase_fact_edges(facts, wm, kb)
-    out = edges.select(
+    return edges.select(
         "conv_id",
         "turn_idx",
         "subj_name",
@@ -762,7 +768,6 @@ def kg_phrase_fact_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("end").alias("end_off"),
         "role",
     )
-    return dedup.propagate_ownership(edges, out)
 KG_PHRASE_EDGES_SQL = _KG_SQL_PROLOGUE + """
 , tokp AS (
   SELECT conv_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS idx
@@ -1252,14 +1257,10 @@ def _kg_mt_run(spark: SparkSession, sf_dir: str):
     hit = _KG_CACHE.get(key)
     if hit is not None and hit[0] is spark and _session_alive(spark):
         return hit[1], hit[2]
-    kb = resources.driver_kb()
     turns = assemble.assemble_turns(
         _doc_mt_transcripts(spark, sf_dir), num_partitions=32
     )
-    facts, tf = relations.extract_facts(turns, kb)
-    facts = facts.persist()
-    _KG_CACHE[key] = (spark, facts, tf)
-    return facts, tf
+    return _kg_memo(key, spark, turns)
 # multi-turn prologue: IDENTICAL fact semantics, only the conv/turn fold
 # differs — derived by substitution so the two prologues cannot drift
 _KG_MT_SQL_PROLOGUE = _KG_SQL_PROLOGUE.replace(
@@ -1356,7 +1357,7 @@ def kg_multiturn_phrase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = assemble.admit_turns(_doc_mt_transcripts(spark, sf_dir))
     wm = mentions.detect_mentions(tr, kb)
     edges = materialize.phrase_fact_edges(facts, wm, kb)
-    out = edges.select(
+    return edges.select(
         "conv_id",
         "turn_idx",
         "subj_name",
@@ -1366,7 +1367,6 @@ def kg_multiturn_phrase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("end").alias("end_off"),
         "role",
     )
-    return dedup.propagate_ownership(edges, out)
 KG_MT_PHRASE_EDGES_SQL = _KG_MT_SQL_PROLOGUE + """
 , tokp AS (
   SELECT conv_id, turn_idx, unnest(toks) AS tok,

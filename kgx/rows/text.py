@@ -654,12 +654,11 @@ def text_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ranks = graph.pagerank_int(und, iters=2)
     w = Window.orderBy(F.col("rank").desc(), F.col("word"))
-    out = (
+    return (
         ranks.select(F.col("node").alias("word"), "rank")
         .withColumn("pos", F.row_number().over(w).cast("int"))
         .filter(F.col("pos") <= 50)
     )
-    return dedup.propagate_ownership(ranks, out)
 from kgx.rows.events import _PR_ITER  # noqa: E402  (unrolled iteration CTE)
 TEXT_TEXTRANK_SQL = (
     """

@@ -28,6 +28,7 @@ from typing import Sequence
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from kgx import cache
 from kgx.dedup import md5_hash60
 
 
@@ -457,10 +458,9 @@ def kmv_intersection(
     Returns ONE row: (k, theta_t, n_matches, est_intersection,
     exact_intersection). The (<= 2k)-row sketch frame is persisted ONCE
     and feeds its three consumers (theta stats, side A, side B) — the
-    text_dup_substring convention; RELEASE OBLIGATION:
-    ``result._kgx_persisted`` carries it, the caller unpersists."""
+    text_dup_substring convention."""
     pair = df.where(F.col(type_col).isin(type_a, type_b))
-    sk = kmv_sketch(pair, value_col, [type_col], k=k).persist()
+    sk = cache.persist(kmv_sketch(pair, value_col, [type_col], k=k))
     stats = sk.groupBy(type_col).agg(
         F.count("*").alias("n"), F.max("hv").alias("mx")
     )
@@ -487,7 +487,7 @@ def kmv_intersection(
         .where(F.col("c") == 2)
         .agg(F.count("*").cast("long").alias("exact_intersection"))
     )
-    out = (
+    return (
         matches.crossJoin(F.broadcast(theta))
         .crossJoin(F.broadcast(exact))
         .select(
@@ -502,5 +502,3 @@ def kmv_intersection(
             "exact_intersection",
         )
     )
-    out._kgx_persisted = [sk]
-    return out

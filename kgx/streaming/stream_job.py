@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from kgx import aggregate, assemble, mentions, relations, resources, schema
+from kgx import aggregate, assemble, cache, mentions, relations, resources, schema
 
 
 def stream_transcripts_from_files(
@@ -74,6 +74,9 @@ def start_kg_stream(
     (batch_id-keyed partitions) does not have this constraint."""
     kb = kb or resources.default_kb()
 
+    # one cache scope per micro-batch: a continuous stream must not pin
+    # the batch's cached intermediates until restart
+    @cache.scope()
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -83,28 +86,16 @@ def start_kg_stream(
         triples = aggregate.all_triples(facts, tf).withColumn(
             "batch_id", F.lit(batch_id)
         )
-
-        def _release() -> None:
-            # sentence_facts hands its persisted intermediates to the
-            # caller (_kgx_persisted contract); without this a continuous
-            # stream pins two cached frames PER MICRO-BATCH until restart
-            for cached in getattr(facts, "_kgx_persisted", []):
-                cached.unpersist()
-            facts.unpersist()
-
         if merge_table is not None:
             from kgx import materialize
 
-            try:
-                materialize.merge_upsert(
-                    batch_df.sparkSession,
-                    out_dir,
-                    triples,
-                    keys=["conv_id", "classifier"],
-                    table=merge_table,
-                )
-            finally:
-                _release()
+            materialize.merge_upsert(
+                batch_df.sparkSession,
+                out_dir,
+                triples,
+                keys=["conv_id", "classifier"],
+                table=merge_table,
+            )
             return
         # Idempotent batch-keyed sink: partitioning by batch_id and writing
         # with dynamic partition overwrite means a batch retried after a
@@ -119,15 +110,12 @@ def start_kg_stream(
         # being set in kgx.session made the sink silently lossy under any
         # externally-created session; the writer-level option overrides the
         # session conf regardless of who built the session.
-        try:
-            (
-                triples.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ts_day", "batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            _release()
+        (
+            triples.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("ts_day", "batch_id")
+            .parquet(out_dir)
+        )
 
     writer = (
         source.writeStream.foreachBatch(process_batch)

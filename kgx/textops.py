@@ -29,6 +29,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from kgx import cache
+
 # tiny deterministic stopword list (quality + lang heuristics)
 EN_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "that")
 
@@ -717,11 +719,10 @@ def mlm_mask(
         F.col(id_col).cast("string").alias("id"),
         F.posexplode(tokens(F.col(text_col))).alias("tok_idx", "original"),
     )
-    ranks = (
+    ranks = cache.persist(
         ex.select(F.col("original").alias("vtok"))
         .distinct()
         .select("vtok", F.row_number().over(Window.orderBy("vtok")).alias("rnk"))
-        .persist()
     )
     n = ranks.agg(F.count("*").alias("n_vocab"))
     key = F.concat_ws(":", F.col("id"), F.col("tok_idx").cast("string"))
@@ -746,7 +747,7 @@ def mlm_mask(
             ),
         )
     )
-    out = sel.join(F.broadcast(ranks), "rnk", "left").select(
+    return sel.join(F.broadcast(ranks), "rnk", "left").select(
         "id",
         "tok_idx",
         "original",
@@ -756,8 +757,6 @@ def mlm_mask(
         .otherwise(F.col("original"))
         .alias("model_input"),
     )
-    out._kgx_persisted = [ranks]
-    return out
 
 
 def span_corruption(
@@ -874,9 +873,6 @@ def pmi_collocations(
     scale; AQE broadcasts them when small), and the two scalar totals
     ride in as broadcast single-row frames. The bigram count frame is
     persisted once and feeds both T_big and the output.
-
-    RELEASE OBLIGATION: ``result._kgx_persisted`` carries the persisted
-    bigram-count frame; the caller unpersists after consuming.
     """
     base = docs.select(tokens(F.lower(F.col(text_col))).alias("toks"))
     uni = (
@@ -885,7 +881,7 @@ def pmi_collocations(
         .agg(F.count("*").alias("c"))
     )
     t_uni = uni.agg(F.sum("c").cast("long").alias("t_uni"))
-    bc = (
+    bc = cache.persist(
         base.where(F.size("toks") >= 2)
         .select(
             F.explode(
@@ -898,10 +894,9 @@ def pmi_collocations(
         .select("bg.w1", "bg.w2")
         .groupBy("w1", "w2")
         .agg(F.count("*").alias("pair_count"))
-        .persist()
     )
     t_big = bc.agg(F.sum("pair_count").cast("long").alias("t_big"))
-    out = (
+    return (
         bc.where(F.col("pair_count") >= min_count)
         .join(uni.select(F.col("w").alias("w1"), F.col("c").alias("c1")), "w1")
         .join(uni.select(F.col("w").alias("w2"), F.col("c").alias("c2")), "w2")
@@ -919,8 +914,6 @@ def pmi_collocations(
             ).alias("pmi_lift"),
         )
     )
-    out._kgx_persisted = [bc]
-    return out
 
 
 def winnow_fingerprints(

@@ -11,7 +11,7 @@ so a memory cliff in (a) text_dup_substring's persisted shingle frame and
 
 Appends results to BENCH/SCALE.md. Storage peaks come from
 sc.getRDDStorageInfo() captured while the operator's persisted frames are
-still alive (before the ownership-contract unpersist).
+still alive (before their kgx.cache scope exits).
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def loadavg() -> float:
 def main() -> None:
     import pyspark.sql.functions as F
 
-    from kgx import aggregate, assemble, benchgen, relations, resources, session
+    from kgx import aggregate, assemble, benchgen, cache, relations, resources, session
 
     os.makedirs(WORK, exist_ok=True)
     spark = session.get_spark(
@@ -70,15 +70,12 @@ def main() -> None:
     files = sorted(_glob.glob(f"{tr_path}/*.parquet"))
     warm = spark.read.parquet(*files[: max(4, len(files) // 8)])
 
+    @cache.scope()
     def kg_run(df, capture: bool):
         turns = assemble.admit_turns(df)
         facts, tf = relations.extract_facts(turns, kb)
-        facts = facts.persist()
-        n = aggregate.all_triples(facts, tf).count()
+        n = aggregate.all_triples(cache.persist(facts), tf).count()
         peak = storage_peak_mb(spark) if capture else 0.0
-        facts.unpersist()
-        for cached in getattr(facts, "_kgx_persisted", []):
-            cached.unpersist()
         return n, peak
 
     kg_run(warm, capture=False)  # codegen + Arrow workers + matcher caches
@@ -119,13 +116,11 @@ def main() -> None:
 
     for qname in ("text_dup_substring", "dedup_simhash"):
         fn, _sql = REGISTRY[qname]
-        t0 = time.monotonic()
-        df = fn(spark, docs_dir)
-        n = df.count()
-        peak = storage_peak_mb(spark)
-        wall = round(time.monotonic() - t0, 1)
-        for cached in getattr(df, "_kgx_persisted", []):
-            cached.unpersist()
+        with cache.scope():
+            t0 = time.monotonic()
+            n = fn(spark, docs_dir).count()
+            peak = storage_peak_mb(spark)
+            wall = round(time.monotonic() - t0, 1)
         spark.catalog.clearCache()
         results[qname] = {
             "docs": n_docs, "rows_out": n, "wall_s": wall,

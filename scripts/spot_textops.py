@@ -43,7 +43,7 @@ def loadavg() -> float:
 def main() -> None:
     import pyspark.sql.functions as F
 
-    from kgx import session
+    from kgx import cache, session
 
     os.makedirs(WORK, exist_ok=True)
     spark = session.get_spark(
@@ -80,13 +80,11 @@ def main() -> None:
         fn, _sql = REGISTRY[qname]
         fn(spark, docs_dir).count()  # warm codegen on the real plan shape
         spark.catalog.clearCache()
-        t0 = time.monotonic()
-        df = fn(spark, docs_dir)
-        n = df.count()
-        peak = storage_peak_mb(spark)
-        wall = round(time.monotonic() - t0, 1)
-        for cached in getattr(df, "_kgx_persisted", []):
-            cached.unpersist()
+        with cache.scope():
+            t0 = time.monotonic()
+            n = fn(spark, docs_dir).count()
+            peak = storage_peak_mb(spark)
+            wall = round(time.monotonic() - t0, 1)
         spark.catalog.clearCache()
         results[qname] = {
             "docs": n_docs, "rows_out": n, "wall_s": wall,

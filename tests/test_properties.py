@@ -68,7 +68,10 @@ def test_job_resume_skips_completed_stages(spark, tmp_path):
     out = str(tmp_path / "kg")
 
     transcripts = spark.read.parquet(inp)
+    spark.catalog.clearCache()
     paths = job.run_pipeline(spark, transcripts, out, resume=True)
+    # every cache the run made was released by its stage's scope
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     first = spark.read.parquet(paths["triples"]).count()
     extract_mtime = os.path.getmtime(os.path.join(paths["facts"], "_KGX_STAGE_OK"))
 

@@ -289,7 +289,7 @@ def test_phrase_fact_edges_roles(spark):
     kb = resources.default_kb()
     turns = assemble.admit_turns(tr)
     wm = mentions_mod.detect_mentions(turns, kb)
-    facts, _tf = relations.sentence_facts(wm, kb, persist=False)
+    facts, _tf = relations.sentence_facts(wm, kb)
     edges = materialize.phrase_fact_edges(facts, wm, kb)
     roles = {(r["role"], r["subj_name"]) for r in edges.collect()}
     # direct fact on Acme: subject + orientation + feature edges

@@ -6,7 +6,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from kgx import aggregate, assemble, mentions, relations, resources, synth
+from kgx import aggregate, assemble, cache, mentions, relations, resources, synth
 from kgx.streaming import stream_job
 
 
@@ -423,10 +423,9 @@ def test_candidate_pair_kernel_invariants(spark):
             (r.id_a, r.id_b)
             for r in dedup.candidate_pairs_from_buckets(buckets, None).collect()
         }
-        capped_df = dedup.candidate_pairs_from_buckets(buckets, cap)
-        capped = {(r.id_a, r.id_b) for r in capped_df.collect()}
-        for frame in getattr(capped_df, "_kgx_persisted", []):
-            frame.unpersist()
+        with cache.scope():
+            capped_df = dedup.candidate_pairs_from_buckets(buckets, cap)
+            capped = {(r.id_a, r.id_b) for r in capped_df.collect()}
 
         assert capped <= uncapped, "cap invented a pair"
         assert all(a < b for a, b in capped), "non-canonical pair"

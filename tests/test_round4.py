@@ -128,25 +128,6 @@ def test_video_frame_sampling_real_from_round5(spark):
 
 
 # ---------------------------------------------------------------------------
-# ownership propagation helper
-# ---------------------------------------------------------------------------
-
-def test_propagate_ownership_carries_and_noops(spark):
-    from kgx import dedup
-
-    a = spark.range(10)
-    b = spark.range(10)
-    src = dedup.give_ownership(spark.range(5), [a, b])
-    out = src.select("id")
-    assert not hasattr(out, "_kgx_persisted")
-    out = dedup.propagate_ownership(src, out)
-    assert out._kgx_persisted == [a, b]
-    # no-op when the source owns nothing: must not create an empty claim
-    clean = dedup.propagate_ownership(spark.range(3), spark.range(3).select("id"))
-    assert not hasattr(clean, "_kgx_persisted")
-
-
-# ---------------------------------------------------------------------------
 # merge_upsert view uniqueness (fallback path; engine path needs jars)
 # ---------------------------------------------------------------------------
 

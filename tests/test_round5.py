@@ -11,6 +11,8 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from kgx import cache
+
 SF_DIR = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -561,24 +563,23 @@ def test_negative_samples_properties(spark):
         [(1, 10), (1, 20), (2, 10), (3, 30)], ["custkey", "suppkey"]
     )
     ents = spark.createDataFrame([(s,) for s in (10, 20, 30, 40)], ["suppkey"])
-    out = graph.negative_samples(pos, ents, "custkey", "suppkey", k=3)
-    rows = {(r.custkey, r.suppkey, r.label, r.neg_idx) for r in out.collect()}
-    pos_rows = {(c, s) for c, s, l, i in rows if l == 1}
-    assert pos_rows == {(1, 10), (1, 20), (2, 10), (3, 30)}
-    assert all(i == 0 for c, s, l, i in rows if l == 1)
-    neg_rows = {(c, s) for c, s, l, i in rows if l == 0}
-    assert not (neg_rows & pos_rows), "a negative sample is a true edge"
-    # per-positive bound: k=3 corruptions max (collisions/anti-join shrink)
-    from collections import Counter
+    with cache.scope():
+        out = graph.negative_samples(pos, ents, "custkey", "suppkey", k=3)
+        rows = {(r.custkey, r.suppkey, r.label, r.neg_idx) for r in out.collect()}
+        pos_rows = {(c, s) for c, s, l, i in rows if l == 1}
+        assert pos_rows == {(1, 10), (1, 20), (2, 10), (3, 30)}
+        assert all(i == 0 for c, s, l, i in rows if l == 1)
+        neg_rows = {(c, s) for c, s, l, i in rows if l == 0}
+        assert not (neg_rows & pos_rows), "a negative sample is a true edge"
+        # per-positive bound: k=3 corruptions max (collisions/anti-join shrink)
+        from collections import Counter
 
-    per_pos = Counter((c,) for c, s, l, i in rows if l == 0)
-    assert all(v <= 3 * 2 for v in per_pos.values())  # cust 1 has 2 positives
-    rows2 = {(r.custkey, r.suppkey, r.label, r.neg_idx)
-             for r in graph.negative_samples(
-                 pos, ents, "custkey", "suppkey", k=3).collect()}
-    assert rows == rows2
-    for f in getattr(out, "_kgx_persisted", []):
-        f.unpersist()
+        per_pos = Counter((c,) for c, s, l, i in rows if l == 0)
+        assert all(v <= 3 * 2 for v in per_pos.values())  # cust 1 has 2 positives
+        rows2 = {(r.custkey, r.suppkey, r.label, r.neg_idx)
+                 for r in graph.negative_samples(
+                     pos, ents, "custkey", "suppkey", k=3).collect()}
+        assert rows == rows2
 
 
 def test_mention_contexts_window_clipping(spark):
@@ -617,24 +618,23 @@ def test_random_walks_are_valid_paths(spark):
         [(1, 10), (1, 20), (2, 10), (2, 30), (3, 20)], ["c", "s"]
     )
     edges = graph.undirected_edges(pairs, "c", "s")
-    out = graph.random_walks(edges, walk_len=4, walks_per_node=2)
-    rows = [(r.start, r.walk_id, r.step, r.node) for r in out.collect()]
-    edge_set = {(r.src, r.dst) for r in edges.distinct().collect()}
-    n_nodes = len({s for s, _ in edge_set})
-    assert len(rows) == n_nodes * 2 * 4
-    walks = {}
-    for start, wid, step, node in rows:
-        walks.setdefault((start, wid), {})[step] = node
-    for (start, wid), path in walks.items():
-        assert sorted(path) == [0, 1, 2, 3]
-        assert path[0] == start
-        for s in range(3):
-            assert (path[s], path[s + 1]) in edge_set, (start, wid, path)
-    rows2 = [(r.start, r.walk_id, r.step, r.node)
-             for r in graph.random_walks(edges, walk_len=4, walks_per_node=2).collect()]
-    assert sorted(rows) == sorted(rows2)
-    for f in getattr(out, "_kgx_persisted", []):
-        f.unpersist()
+    with cache.scope():
+        out = graph.random_walks(edges, walk_len=4, walks_per_node=2)
+        rows = [(r.start, r.walk_id, r.step, r.node) for r in out.collect()]
+        edge_set = {(r.src, r.dst) for r in edges.distinct().collect()}
+        n_nodes = len({s for s, _ in edge_set})
+        assert len(rows) == n_nodes * 2 * 4
+        walks = {}
+        for start, wid, step, node in rows:
+            walks.setdefault((start, wid), {})[step] = node
+        for (start, wid), path in walks.items():
+            assert sorted(path) == [0, 1, 2, 3]
+            assert path[0] == start
+            for s in range(3):
+                assert (path[s], path[s + 1]) in edge_set, (start, wid, path)
+        rows2 = [(r.start, r.walk_id, r.step, r.node)
+                 for r in graph.random_walks(edges, walk_len=4, walks_per_node=2).collect()]
+        assert sorted(rows) == sorted(rows2)
 
 
 def test_mlm_mask_action_split_and_inputs(spark):
@@ -792,10 +792,9 @@ def test_jaccard_similarity_hub_cap_and_exact_scores(spark):
     edges = spark.createDataFrame(pairs, "src string, dst string")
     sym = edges.unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
-    out = graph.jaccard_similarity(sym, max_middle_degree=2, min_common=1)
-    rows = {(r.a, r.b): r for r in out.collect()}
-    for cached in out._kgx_persisted:
-        cached.unpersist()
+    with cache.scope():
+        out = graph.jaccard_similarity(sym, max_middle_degree=2, min_common=1)
+        rows = {(r.a, r.b): r for r in out.collect()}
     # K (deg 3) is over the cap, so its wedges (a,b),(a,c),(b,c) vanish;
     # surviving middles: m -> (a,b), and a/b (deg 2 each) -> (K,m) twice
     assert set(rows) == {("a", "b"), ("K", "m")}
@@ -810,10 +809,9 @@ def test_jaccard_similarity_hub_cap_and_exact_scores(spark):
 
     # without the cap (a,b) scores the true 2/(2+2-2) = 1.0 and K's
     # wedges reappear
-    out2 = graph.jaccard_similarity(sym, max_middle_degree=10, min_common=1)
-    rows2 = {(r.a, r.b): r.jaccard for r in out2.collect()}
-    for cached in out2._kgx_persisted:
-        cached.unpersist()
+    with cache.scope():
+        out2 = graph.jaccard_similarity(sym, max_middle_degree=10, min_common=1)
+        rows2 = {(r.a, r.b): r.jaccard for r in out2.collect()}
     assert rows2[("a", "b")] == 1.0
     assert rows2[("a", "c")] == 0.5 and rows2[("b", "c")] == 0.5
     assert set(rows2) == {("a", "b"), ("a", "c"), ("b", "c"), ("K", "m")}

@@ -7,12 +7,7 @@ import math
 
 import pyspark.sql.functions as F
 
-from kgx import graph, resources
-
-
-def _release(df):
-    for f in getattr(df, "_kgx_persisted", []):
-        f.unpersist()
+from kgx import cache, graph, resources
 
 
 # ------------------------------------------------- resource allocation ----
@@ -25,9 +20,9 @@ def test_resource_allocation_matches_hand_computation(spark):
                 ("h", "a"), ("h", "b"), ("h", "c"), ("h", "d")]
     sym = [(u, v) for u, v in edges_uv] + [(v, u) for u, v in edges_uv]
     edges = spark.createDataFrame(sym, "src string, dst string")
-    out = graph.resource_allocation(edges, max_middle_degree=3, min_common=1)
-    rows = {(r.a, r.b): r for r in out.collect()}
-    _release(out)
+    with cache.scope():
+        out = graph.resource_allocation(edges, max_middle_degree=3, min_common=1)
+        rows = {(r.a, r.b): r for r in out.collect()}
     # deg(b) = deg(d) = 3 (a, c, h); the hub h (deg 4) is capped out of
     # the middle set, so ra(a,c) = 2 * (10^12 div 3) exactly
     ac = rows[("a", "c")]
@@ -46,9 +41,9 @@ def test_resource_allocation_weighs_low_degree_middles_higher(spark):
              ("m2", "e1"), ("m2", "e2")]
     sym = pairs + [(b, a) for a, b in pairs]
     edges = spark.createDataFrame(sym, "src string, dst string")
-    out = graph.resource_allocation(edges, max_middle_degree=10, min_common=1)
-    row = [r for r in out.collect() if {r.a, r.b} == {"x", "y"}][0]
-    _release(out)
+    with cache.scope():
+        out = graph.resource_allocation(edges, max_middle_degree=10, min_common=1)
+        row = [r for r in out.collect() if {r.a, r.b} == {"x", "y"}][0]
     assert row.n_common == 2
     assert row.ra_scaled == 10**12 // 2 + 10**12 // 4
     assert math.isclose(row.ra, 0.75, rel_tol=1e-12)

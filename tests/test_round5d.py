@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from kgx import curation, graph, textops
+from kgx import cache, curation, graph, textops
 
 
 # ------------------------------------------- label propagation (LPA) ----
@@ -31,10 +31,9 @@ def test_lpa_mode_rule_diverges_from_min_propagation(spark):
         ("z", "a"), ("z", "x1"), ("z", "x2"),
         ("x1", "x2"), ("x1", "y"), ("x2", "y"),
     ]
-    out = graph.label_propagation(_sym(spark, und), rounds=2)
-    got = {r.node: r.community for r in out.collect()}
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = graph.label_propagation(_sym(spark, und), rounds=2)
+        got = {r.node: r.community for r in out.collect()}
     # round 2: a sees {b:'a', c:'a', z:'a'} -> 'a'; b sees {a:'b', c:'a'}
     # tie -> 'a'; c sees {a:'b', b:'a'} tie -> 'a'; y sees {x1:'x2',
     # x2:'x1'} tie -> 'x1'.
@@ -48,10 +47,9 @@ def test_lpa_mode_rule_diverges_from_min_propagation(spark):
 
 def test_lpa_all_nodes_labeled_exactly_once(spark):
     und = [("a", "b"), ("b", "c"), ("d", "e")]
-    out = graph.label_propagation(_sym(spark, und), rounds=2)
-    rows = out.collect()
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = graph.label_propagation(_sym(spark, und), rounds=2)
+        rows = out.collect()
     assert len(rows) == 5
     assert len({r.node for r in rows}) == 5
 
@@ -74,10 +72,9 @@ def test_dsir_weights_rank_target_like_docs_higher(spark):
     docs = spark.createDataFrame(
         rows, "doc_id int, text string, is_target boolean"
     )
-    out = curation.dsir_weights(docs)
-    got = {r.doc_id: r.dsir_weight for r in out.collect()}
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = curation.dsir_weights(docs)
+        got = {r.doc_id: r.dsir_weight for r in out.collect()}
     assert got[5] > got[6]
     # weights are positive and the target-language docs themselves score
     # highest of all
@@ -93,10 +90,9 @@ def test_dsir_quantization_contract_is_exact_integers(spark):
         [(1, "w w", True), (2, "w", False)],
         "doc_id int, text string, is_target boolean",
     )
-    out = curation.dsir_weights(docs)
-    rows = {r.doc_id: r for r in out.collect()}
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = curation.dsir_weights(docs)
+        rows = {r.doc_id: r for r in out.collect()}
     # corpus: c_r('w')=3, c_t('w')=2 -> per-token term with tf=2:
     # (2 * 3 * 1_000_000) div 4 = 1_500_000
     assert rows[1].score_num_q == 1_500_000
@@ -119,10 +115,9 @@ def test_pmi_lift_ranks_collocation_over_chance_pair(spark):
         ],
         "doc_id int, text string",
     )
-    out = textops.pmi_collocations(docs, min_count=2)
-    got = {(r.w1, r.w2): r for r in out.collect()}
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = textops.pmi_collocations(docs, min_count=2)
+        got = {(r.w1, r.w2): r for r in out.collect()}
     assert ("new", "york") in got
     ny = got[("new", "york")]
     # exact margins: 'new' appears 4x, 'york' 4x, pair 4x
@@ -135,9 +130,8 @@ def test_pmi_min_count_filters_rare_pairs(spark):
     docs = spark.createDataFrame(
         [(1, "a b a b a b"), (2, "c d")], "doc_id int, text string"
     )
-    out = textops.pmi_collocations(docs, min_count=3)
-    got = {(r.w1, r.w2) for r in out.collect()}
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = textops.pmi_collocations(docs, min_count=3)
+        got = {(r.w1, r.w2) for r in out.collect()}
     assert ("a", "b") in got
     assert ("c", "d") not in got

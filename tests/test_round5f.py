@@ -3,7 +3,7 @@ keyword scores."""
 
 from __future__ import annotations
 
-from kgx import graph, textops
+from kgx import cache, graph, textops
 
 
 # ------------------------------------------- HITS ----------------------
@@ -17,10 +17,9 @@ def test_hits_two_iterations_hand_traced(spark):
     edges = spark.createDataFrame(
         [("a", "x"), ("a", "y"), ("b", "x")], "src string, dst string"
     )
-    out = graph.hits_int(edges, iters=2)
-    got = {r.node: (r.hub, r.auth) for r in out.collect()}
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = graph.hits_int(edges, iters=2)
+        got = {r.node: (r.hub, r.auth) for r in out.collect()}
     assert got == {
         "a": (8, 0),
         "b": (5, 0),
@@ -36,10 +35,9 @@ def test_hits_bipartite_purity(spark):
     edges = spark.createDataFrame(
         [(f"c{i}", f"s{i % 3}") for i in range(9)], "src string, dst string"
     )
-    out = graph.hits_int(edges, iters=2)
-    rows = out.collect()
-    for f in out._kgx_persisted:
-        f.unpersist()
+    with cache.scope():
+        out = graph.hits_int(edges, iters=2)
+        rows = out.collect()
     for r in rows:
         if r.node.startswith("c"):
             assert r.auth == 0 and r.hub > 0

@@ -7,18 +7,13 @@ import datetime
 
 import pyspark.sql.functions as F
 
-from kgx import graph, stats
+from kgx import cache, graph, stats
 
 
 def _edges(spark, pairs):
     return spark.createDataFrame(
         [(u, v) for u, v in pairs], "u string, v string"
     )
-
-
-def _release(df):
-    for f in getattr(df, "_kgx_persisted", []):
-        f.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -30,9 +25,9 @@ def test_ktruss_peels_pendant_and_keeps_clique(spark):
     # (0 triangles) and a tail triangle d-f-g (each edge in 1 triangle).
     k4 = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")]
     extra = [("d", "e"), ("d", "f"), ("d", "g"), ("f", "g")]
-    out = graph.ktruss(_edges(spark, k4 + extra), k=4, rounds=2)
-    rows = {(r.u, r.v): r.support for r in out.collect()}
-    _release(out)
+    with cache.scope():
+        out = graph.ktruss(_edges(spark, k4 + extra), k=4, rounds=2)
+        rows = {(r.u, r.v): r.support for r in out.collect()}
     # 4-truss (support >= 2): exactly the K4 edges survive, each with
     # support 2 counted in the round-1 subgraph (K4 + tail alone).
     assert set(rows) == set(k4)
@@ -41,9 +36,9 @@ def test_ktruss_peels_pendant_and_keeps_clique(spark):
 
 def test_ktruss_k3_keeps_all_triangle_edges(spark):
     tri = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")]
-    out = graph.ktruss(_edges(spark, tri), k=3, rounds=2)
-    rows = {(r.u, r.v): r.support for r in out.collect()}
-    _release(out)
+    with cache.scope():
+        out = graph.ktruss(_edges(spark, tri), k=3, rounds=2)
+        rows = {(r.u, r.v): r.support for r in out.collect()}
     assert set(rows) == {("a", "b"), ("a", "c"), ("b", "c")}
     assert all(s == 1 for s in rows.values())
 
@@ -65,13 +60,13 @@ def test_ktruss_cascade_needs_second_round(spark):
     # keeps {b-c, c-d}; round 2 finds no triangles -> empty (the cascade).
     pairs = [("a", "b"), ("a", "c"), ("b", "c"), ("b", "d"), ("c", "d"),
              ("c", "e"), ("d", "e")]
-    r1 = graph.ktruss(_edges(spark, pairs), k=4, rounds=1)
-    kept1 = {(r.u, r.v) for r in r1.collect()}
-    _release(r1)
+    with cache.scope():
+        r1 = graph.ktruss(_edges(spark, pairs), k=4, rounds=1)
+        kept1 = {(r.u, r.v) for r in r1.collect()}
     assert kept1 == {("b", "c"), ("c", "d")}
-    r2 = graph.ktruss(_edges(spark, pairs), k=4, rounds=2)
-    kept2 = {(r.u, r.v) for r in r2.collect()}
-    _release(r2)
+    with cache.scope():
+        r2 = graph.ktruss(_edges(spark, pairs), k=4, rounds=2)
+        kept2 = {(r.u, r.v) for r in r2.collect()}
     assert kept2 == set()
 
 
@@ -84,9 +79,9 @@ def test_ktruss_survivors_subset_with_min_support(spark):
     pairs = sorted(p for p in itertools.combinations(nodes, 2)
                    if rng.random() < 0.45)
     base = _edges(spark, pairs)
-    out = graph.ktruss(base, k=5, rounds=3)
-    rows = {(r.u, r.v): r.support for r in out.collect()}
-    _release(out)
+    with cache.scope():
+        out = graph.ktruss(base, k=5, rounds=3)
+        rows = {(r.u, r.v): r.support for r in out.collect()}
     assert set(rows) <= set(pairs)
     assert all(s >= 3 for s in rows.values())
 
@@ -102,9 +97,9 @@ def test_harmonic_closeness_path_graph(spark):
     for u, v in [("a", "b"), ("b", "c"), ("c", "d")]:
         und += [(u, v), (v, u)]
     edges = spark.createDataFrame(und, "src string, dst string")
-    out = graph.harmonic_closeness(edges, n_landmarks=1, max_depth=3)
-    rows = {r.node: (r.n_reached, r.harmonic_scaled, r.harmonic) for r in out.collect()}
-    _release(out)
+    with cache.scope():
+        out = graph.harmonic_closeness(edges, n_landmarks=1, max_depth=3)
+        rows = {r.node: (r.n_reached, r.harmonic_scaled, r.harmonic) for r in out.collect()}
     # distances from landmark b: a=1, c=1, d=2 (b's own 0 row excluded)
     assert rows == {
         "a": (1, 10**12, 1.0),
@@ -119,9 +114,9 @@ def test_harmonic_closeness_sums_over_landmarks(spark):
     for u, v in [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d")]:
         und += [(u, v), (v, u)]
     edges = spark.createDataFrame(und, "src string, dst string")
-    out = graph.harmonic_closeness(edges, n_landmarks=2, max_depth=3)
-    rows = {r.node: (r.n_reached, r.harmonic_scaled) for r in out.collect()}
-    _release(out)
+    with cache.scope():
+        out = graph.harmonic_closeness(edges, n_landmarks=2, max_depth=3)
+        rows = {r.node: (r.n_reached, r.harmonic_scaled) for r in out.collect()}
     # landmarks {c, a}: b is dist 1 from both -> 2e12; d dist 1 from c,
     # dist 2 from a -> 1.5e12; a dist 1 from c (own row excluded);
     # c dist 1 from a.
@@ -521,9 +516,9 @@ def test_clustering_coefficient_hand_graph(spark):
 
     # triangle a-b-c plus spoke c-d plus isolated pair e-f
     pairs = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "d"), ("e", "f")]
-    out = graph.clustering_coefficient(_edges(spark, pairs))
-    got = {r.node: (r.deg, r.n_triangles, r.clustering) for r in out.collect()}
-    _release(out)
+    with cache.scope():
+        out = graph.clustering_coefficient(_edges(spark, pairs))
+        got = {r.node: (r.deg, r.n_triangles, r.clustering) for r in out.collect()}
     assert got["a"] == (2, 1, 1.0)
     assert got["b"] == (2, 1, 1.0)
     # c: deg 3, 1 triangle -> 2/(3*2) = 1/3
@@ -679,3 +674,98 @@ def test_kb_tables_are_local_relations_and_verify_rows(spark):
     huge = dataclasses.replace(kb, indicators=[tuple(ind)] + kb.indicators[1:])
     with pytest.raises(PySparkValueError, match="VALUE_OUT_OF_BOUNDS"):
         huge.indicators_df(spark)
+
+
+# ---------------------------------------------------------------------------
+# cache ownership: one scope releases what its producers persisted
+# ---------------------------------------------------------------------------
+
+def test_cache_scope_releases_only_what_it_cached(spark):
+    import pytest
+    from pyspark import StorageLevel
+
+    def nothing_cached():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    spark.catalog.clearCache()
+    und = []
+    for u, v in [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")]:
+        und += [(u, v), (v, u)]
+    edges = spark.createDataFrame(und, "src string, dst string")
+
+    # a projection over the producer's result still releases its caches
+    with cache.scope():
+        ranks = graph.pagerank_int(edges, iters=2).select("node")
+        assert len(ranks.collect()) == 4
+        assert not nothing_cached()
+    assert nothing_cached()
+
+    # a frame the caller cached beforehand survives the producer's scope
+    mine = edges.persist()
+    with cache.scope():
+        rows = graph.jaccard_similarity(edges, min_common=1).collect()
+    assert rows
+    assert mine.storageLevel != StorageLevel.NONE
+    mine.unpersist()
+    assert nothing_cached()
+
+    # an exception inside the scope still releases
+    with pytest.raises(RuntimeError):
+        with cache.scope():
+            boom = cache.persist(spark.range(5))
+            boom.count()
+            raise RuntimeError("boom")
+    assert boom.storageLevel == StorageLevel.NONE
+
+    # an inner scope releases only its own frames
+    with cache.scope():
+        outer = cache.persist(spark.range(6))
+        with cache.scope():
+            inner = cache.persist(spark.range(7))
+        assert inner.storageLevel == StorageLevel.NONE
+        assert outer.storageLevel != StorageLevel.NONE
+    assert nothing_cached()
+
+    # the scope stack is per thread: a frame another thread persists
+    # outside any scope of its own is not this scope's to release
+    import threading
+
+    other = []
+    with cache.scope():
+        t = threading.Thread(target=lambda: other.append(cache.persist(spark.range(8))))
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert other[0].storageLevel != StorageLevel.NONE
+    other[0].unpersist()
+    assert nothing_cached()
+
+
+def test_persist_only_through_cache():
+    # one cache-ownership mechanism: every kgx persist goes through
+    # kgx.cache, except the session-lifetime kg memo in kgx/rows/kg.py
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "kgx"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root.parent).as_posix()
+        if rel == "kgx/cache.py":
+            continue
+        tree = ast.parse(path.read_text())
+        allowed = set()
+        if rel == "kgx/rows/kg.py":
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef) and fn.name == "_kg_memo":
+                    allowed |= {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "persist"
+                and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "cache")
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert offenders == []

@@ -25,8 +25,11 @@ def test_stream_matches_batch(spark, tmp_path):
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     source = stream_job.stream_transcripts_from_files(spark, src_dir, max_files_per_trigger=1)
+    spark.catalog.clearCache()
     q = stream_job.start_kg_stream(spark, source, out_dir, ckpt, available_now=True)
     q.awaitTermination(120)
+    # each micro-batch released the caches it made
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     got = (
         spark.read.parquet(out_dir)

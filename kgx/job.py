@@ -17,6 +17,24 @@ reruns too, so no output is built from a stale upstream one:
     phrase_edges/doc_meta/carryover) → triples (+ indicator_nodes,
     results) → nodes → analytics (entity_degrees, corpus_meta and the
     url/query-parameter/node-property dims)
+
+Inside a stage, once its shared inputs are written, its independent
+writes run at the same time (`write_all`, one thread per write). The
+rules of that pool:
+  * every frame is built in the calling thread, each `kgx.cache.persist`
+    included, because a `kgx.cache.scope()` belongs to one thread;
+  * each write starts through `inheritable_thread_target(spark)`, so its
+    jobs keep the caller's job group, description and tags;
+  * a failure in any write fails the stage;
+  * the lineage append and the markers come after all of a stage's
+    writes, and stages run one after another: every append goes to the
+    one `lineage/` dir, and concurrent appends would share its
+    `_temporary` dir.
+
+No job writes nothing: every output the job reads back or counts is
+written conformed to its declared schema (`SCHEMAS`) and read with it
+(no schema-inference job), and the row counts lineage and the validity
+gate need are observed on the writes themselves (`DataFrame.observe`).
 """
 
 from __future__ import annotations
@@ -27,9 +45,11 @@ import os
 import shutil
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from kgx import (
     aggregate,
@@ -37,10 +57,12 @@ from kgx import (
     cache,
     canonical,
     lineage,
+    linking,
     materialize,
     mentions as mentions_mod,
     relations,
     resources,
+    schema,
     session,
 )
 
@@ -59,20 +81,45 @@ STAGES: dict[str, tuple[str, ...]] = {
     ),
 }
 # the output whose per-partition row counts a stage's lineage records (its
-# summary rows_out is their sum); analytics writes only small rollups
+# summary rows_out is the row count observed on that output's write);
+# analytics writes only small rollups
 COUNTED = {"extract": "facts", "triples": "triples", "nodes": "nodes"}
+# the declared schema of every output the job reads back or counts: each
+# is written conformed to it and read with it, so no read infers a schema
+SCHEMAS = {
+    "facts": schema.FACTS,
+    "turn_feats": schema.TURN_FEATS,
+    "doc_meta": schema.DOC_META,
+    "triples": schema.TRIPLES,
+    "nodes": schema.NODES,
+}
 
 
 def input_identity(
     transcripts: DataFrame, kb: resources.KnowledgeBase, max_text_len: int
 ) -> str:
     """What a stage's outputs were computed from: the KB version, the
-    admission limit and the input's sorted file list (its plan's semantic
-    hash when it reads no files). A file rewritten in place keeps its
-    identity; write a new input to a new path."""
+    admission limit, the input's sorted file list (its plan's semantic
+    hash when it reads no files) and the declared output schemas, so a
+    schema change reruns every stage instead of reading old files with a
+    schema they lack. A file rewritten in place keeps its identity; write
+    a new input to a new path."""
     src = sorted(transcripts.inputFiles()) or transcripts.semanticHash()
-    payload = repr((kb.version(), max_text_len, src))
+    declared = sorted((o, s.simpleString()) for o, s in SCHEMAS.items())
+    payload = repr((kb.version(), max_text_len, src, declared))
     return hashlib.md5(payload.encode()).hexdigest()[:16]
+
+
+def write_all(spark: SparkSession, writes: list[Callable[[], None]]) -> None:
+    """Run a stage's independent writes at the same time, one thread per
+    write, and return once all have ended; the first failure is raised.
+    The caller builds every frame first (a `kgx.cache.scope()` is per
+    thread), and each write starts through `inheritable_thread_target`,
+    so its Spark jobs keep the caller's job group, description and tags."""
+    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
+    for f in futures:
+        f.result()
 
 
 def run_pipeline(
@@ -100,38 +147,67 @@ def run_pipeline(
         ):
             todo.add(stage)
 
-    def run(stage: str, write: Callable[[], None], **meta) -> None:
+    def read(o: str) -> DataFrame:
+        return spark.read.schema(SCHEMAS[o]).parquet(paths[o])
+
+    def writer(df: DataFrame, o: str, *partition_by: str) -> Callable[[], None]:
+        """The write of output `o`, to run now or in a `write_all` pool."""
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        return lambda: w.parquet(paths[o])
+
+    def counted(
+        df: DataFrame, o: str, **metrics: Column
+    ) -> tuple[DataFrame, Observation]:
+        """`df` conformed to output `o`'s declared schema, observed so that
+        its write also yields its row count (`rows`) and `metrics`."""
+        obs = Observation(o)
+        exprs = [F.count(F.lit(1)).alias("rows")]
+        exprs += [e.alias(k) for k, e in metrics.items()]
+        return schema.conform(df, SCHEMAS[o]).observe(obs, *exprs), obs
+
+    def run(
+        stage: str, write: Callable[[], dict | None], **meta
+    ) -> dict | None:
         """Run a stage's writes unless resume finds it done, then append
         its lineage in one write, then mark its outputs: a stage marked
-        done always has its lineage rows, wherever a kill lands."""
+        done always has its lineage rows, wherever a kill lands. Returns
+        the metrics observed on the stage's counted write (None when the
+        stage was skipped or counts nothing)."""
         if stage not in todo:
-            return
+            return None
         t0 = time.monotonic()
         # start from empty dirs: a dynamic partition overwrite would keep
         # the partitions (and the marker) of an earlier input
         for o in STAGES[stage]:
             shutil.rmtree(paths[o], ignore_errors=True)
-        write()
-        counted = COUNTED.get(stage)
+        observed = write()
+        out = COUNTED.get(stage)
         lineage.write_lineage(
             spark,
             os.path.join(out_dir, "lineage"),
             run_id,
             stage,
             wall_ms=int((time.monotonic() - t0) * 1000),
-            out_path=counted and paths[counted],
+            out_path=out and paths[out],
+            out_schema=out and SCHEMAS[out],
+            rows_out=observed and observed["rows"],
             kb_version=kb.version(),
         )
         for o in STAGES[stage]:
             lineage.mark_stage_ok(
                 paths[o], {"run_id": run_id, "input": input_id, **meta}
             )
+        return observed
 
-    # -- stage: extract (assemble + mentions + relations): six writes, each
-    #    its own Spark jobs (~35 in all) over one persisted span frame; the
-    #    scope releases every cache the stage made when it returns --------
+    # -- stage: extract (assemble + mentions + relations). The facts write
+    #    runs first: it fills the turns/spans caches, and phrase_edges reads
+    #    its files. The other five writes then run together over those
+    #    caches; the scope releases every cache the stage made when it
+    #    returns ---------------------------------------------------------
     @cache.scope()
-    def write_extract() -> None:
+    def write_extract() -> dict:
         # map-only admission (no full-text shuffle). Scan split planning
         # (spark.sql.files.maxPartitionBytes) controls parallelism; set
         # num_partitions only to fan out a pathological file layout —
@@ -147,39 +223,40 @@ def run_pipeline(
             mentions_mod.resolved_mentions(mentions_mod.detect_mentions(turns, kb))
         )
         facts, turn_feats = relations.sentence_facts(spans, kb)
-        facts.write.mode("overwrite").partitionBy("ts_day").parquet(paths["facts"])
-        turn_feats.select(
-            "conv_id", "turn_idx", "ts_day", "pos_cnt", "neg_cnt", "has_so"
-        ).write.mode("overwrite").partitionBy("ts_day").parquet(paths["turn_feats"])
-        materialize.write_mentions(
-            materialize.mention_evidence(spans), paths["mentions"]
+        # the invalid-fact count decides whether the validity gate below
+        # needs a job of its own
+        facts, obs = counted(
+            facts, "facts",
+            invalid=F.count_if(F.col("entity_name").isNull() | F.col("pred").isNull()),
         )
+        writer(facts, "facts", "ts_day")()
         # SENTIMENT_PHRASE_RELATION analogue: fact ↔ evidence edges, from
         # the facts just written — the lazy plan would rerun their linking
-        # joins once per edge role
-        pe = materialize.phrase_fact_edges(
-            spark.read.parquet(paths["facts"]), spans, kb
-        )
-        pe.write.mode("overwrite").partitionBy("ts_day").parquet(
-            paths["phrase_edges"]
-        )
-        # DOCUMENT_META_DATA provenance rows
-        materialize.document_meta(turns).write.mode("overwrite").parquet(
-            paths["doc_meta"]
-        )
+        # joins
+        pe = materialize.phrase_fact_edges(read("facts"), spans, kb)
         # coref-lite entity continuity (active SO set per turn, carried
         # across silent turns); one narrow conv_id window
         so = spans.select(
             "conv_id", "turn_idx", mentions_mod.so_set_col().alias("so_set")
         )
-        mentions_mod.carryover_from_so(so).write.mode("overwrite").parquet(
-            paths["carryover"]
-        )
+        tf = turn_feats.select(*schema.TURN_FEATS.fieldNames())
+        write_all(spark, [
+            writer(schema.conform(tf, schema.TURN_FEATS), "turn_feats", "ts_day"),
+            writer(materialize.mention_evidence(spans), "mentions", "ts_day"),
+            writer(pe, "phrase_edges", "ts_day"),
+            # DOCUMENT_META_DATA provenance rows
+            writer(
+                schema.conform(materialize.document_meta(turns), schema.DOC_META),
+                "doc_meta",
+            ),
+            writer(mentions_mod.carryover_from_so(so), "carryover"),
+        ])
+        return obs.get
 
-    run("extract", write_extract)
+    extracted = run("extract", write_extract)
 
-    facts = spark.read.parquet(paths["facts"])
-    turn_feats = spark.read.parquet(paths["turn_feats"])
+    facts = read("facts")
+    turn_feats = read("turn_feats")
 
     # conversation-level validity gate (the reference's skip-the-whole-
     # document abort, SentimentClassification.java:280-284). Applied HERE —
@@ -188,10 +265,13 @@ def run_pipeline(
     # fresh or resumed; gating only inside the triples stage made
     # entity_degrees differ between a fresh run and one that resumed past
     # triples. Skipped entirely when no facts-consuming stage re-runs: a
-    # fully-resumed invocation stays marker-checks-only (no full facts
-    # scan just to compute an unused gate).
+    # fully-resumed invocation stays marker-checks-only. The offender set
+    # is counted only when the facts write observed an invalid fact, or
+    # when extract was skipped and observed nothing.
     n_invalid = 0
-    if todo & {"triples", "analytics"}:
+    if todo & {"triples", "analytics"} and (
+        extracted is None or extracted["invalid"]
+    ):
         bad = relations.invalid_convs(facts)
         n_invalid = bad.count()
         if n_invalid:
@@ -202,37 +282,40 @@ def run_pipeline(
             # fallback row when its facts were dropped
             turn_feats = turn_feats.join(F.broadcast(bad), "conv_id", "left_anti")
 
-    # -- stage: triples (+ SENTIMENT_INDICATOR dim) -------------------------
-    def write_triples() -> None:
-        triples = aggregate.all_triples(facts, turn_feats, salt_buckets=salt_buckets)
-        materialize.write_triples(triples, paths["triples"])
-        from kgx import linking
-
-        materialize.indicator_nodes(
-            facts, linking.indicators_dim(spark, kb)
-        ).write.mode("overwrite").parquet(paths["indicator_nodes"])
+    # -- stage: triples (+ SENTIMENT_INDICATOR dim): triples and
+    #    indicator_nodes together, then results from the written triples -
+    def write_triples() -> dict:
+        triples, obs = counted(
+            aggregate.all_triples(facts, turn_feats, salt_buckets=salt_buckets),
+            "triples",
+        )
+        write_all(spark, [
+            writer(triples, "triples", "ts_day"),
+            writer(
+                materialize.indicator_nodes(facts, linking.indicators_dim(spark, kb)),
+                "indicator_nodes",
+            ),
+        ])
         # S8 nested-result marshal: one ordered result doc per conv, from
         # the triples just written (not a second all_triples run)
-        written = spark.read.parquet(paths["triples"])
-        materialize.result_docs(written).write.mode("overwrite").partitionBy(
-            "ts_day"
-        ).parquet(paths["results"])
+        writer(materialize.result_docs(read("triples")), "results", "ts_day")()
+        return obs.get
 
     run("triples", write_triples, n_invalid_convs=n_invalid)
 
     # -- stage: nodes (canonicalization) -----------------------------------
-    run(
-        "nodes",
-        lambda: materialize.write_nodes(
-            canonical.canonicalize(spark.read.parquet(paths["triples"])),
-            paths["nodes"],
-        ),
-    )
+    def write_nodes() -> dict:
+        nodes, obs = counted(canonical.canonicalize(read("triples")), "nodes")
+        writer(nodes, "nodes")()
+        return obs.get
+
+    run("nodes", write_nodes)
 
     # -- stage: read-side analytics (entity degrees + corpus rollup +
-    #    provenance/property dims: URL, QUERY_PARAMETER, SO_PROPERTY) ------
+    #    provenance/property dims: URL, QUERY_PARAMETER, SO_PROPERTY), all
+    #    five writes together -------------------------------------------
     def write_analytics() -> None:
-        facts.groupBy(
+        degrees = facts.groupBy(
             F.col("entity_name").alias("subj_name"),
             F.col("entity_uri").alias("subj_uri"),
         ).agg(
@@ -245,18 +328,15 @@ def run_pipeline(
             .cast("bigint")
             .alias("n_neg"),
             F.countDistinct("pred").alias("n_preds"),
-        ).write.mode("overwrite").parquet(paths["entity_degrees"])
-        dm = spark.read.parquet(paths["doc_meta"])
-        materialize.corpus_meta(dm).write.mode("overwrite").parquet(
-            paths["corpus_meta"]
         )
-        materialize.url_dim(dm).write.mode("overwrite").parquet(paths["url_dim"])
-        materialize.query_parameters(dm, facts).write.mode(
-            "overwrite"
-        ).parquet(paths["query_params"])
-        materialize.node_properties(facts).write.mode("overwrite").parquet(
-            paths["node_props"]
-        )
+        dm = read("doc_meta")
+        write_all(spark, [
+            writer(degrees, "entity_degrees"),
+            writer(materialize.corpus_meta(dm), "corpus_meta"),
+            writer(materialize.url_dim(dm), "url_dim"),
+            writer(materialize.query_parameters(dm, facts), "query_params"),
+            writer(materialize.node_properties(facts), "node_props"),
+        ])
 
     run("analytics", write_analytics)
     return paths
@@ -303,7 +383,7 @@ def main() -> None:
         resume=not args.no_resume,
         salt_buckets=args.salt,
     )
-    n = spark.read.parquet(paths["triples"]).count()
+    n = spark.read.schema(schema.TRIPLES).parquet(paths["triples"]).count()
     print(f"kgx: wrote {n} triples to {paths['triples']}")
 
 

@@ -23,6 +23,7 @@ import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType
 
 from kgx import schema
 
@@ -56,32 +57,33 @@ def write_lineage(
     *,
     wall_ms: int | None = None,
     out_path: str | None = None,
+    out_schema: StructType | None = None,
     rows_in: int | None = None,
     rows_out: int | None = None,
     kb_version: str | None = None,
 ) -> None:
     """Append lineage rows in one single-file parquet write: a summary row
-    (partition_id NULL) when `wall_ms` is set, and when `out_path` is set
-    one row count per physical partition of that output, whose sum is the
-    summary's `rows_out`. The counts re-read the output with zero data
-    columns, which parquet answers from footer row counts, and every row
-    is built in the JVM (no driver collect, no Python-list DataFrame)."""
+    (partition_id NULL, carrying `rows_out`) when `wall_ms` is set, and
+    when `out_path` is set one row count per physical partition of that
+    output. The counts re-read the output with zero data columns, which
+    parquet answers from footer row counts; pass the output's declared
+    `out_schema` and the re-read infers none. Every row is built in the
+    JVM (no driver collect, no Python-list DataFrame)."""
     parts = []
-    if out_path is not None:
-        counts = (
-            spark.read.parquet(out_path)
-            .groupBy(F.spark_partition_id().cast("int").alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows_out"))
-        )
-        parts.append(counts.withColumn("wall_ms", F.lit(None).cast("long")))
-        total = counts.agg(F.coalesce(F.sum("rows_out"), F.lit(0)).alias("rows_out"))
-    else:
-        total = spark.range(1).select(F.lit(rows_out).cast("long").alias("rows_out"))
     if wall_ms is not None:
-        parts.insert(0, total.select(
-            F.lit(None).cast("int").alias("partition_id"), "rows_out",
+        parts.append(spark.range(1).select(
+            F.lit(None).cast("int").alias("partition_id"),
+            F.lit(rows_out).cast("long").alias("rows_out"),
             F.lit(wall_ms).cast("long").alias("wall_ms"),
         ))
+    if out_path is not None:
+        reader = spark.read if out_schema is None else spark.read.schema(out_schema)
+        parts.append(
+            reader.parquet(out_path)
+            .groupBy(F.spark_partition_id().cast("int").alias("partition_id"))
+            .agg(F.count(F.lit(1)).alias("rows_out"))
+            .withColumn("wall_ms", F.lit(None).cast("long"))
+        )
     rows = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     const = {
         "run_id": F.lit(run_id),

@@ -16,8 +16,9 @@ never shuffles for these joins (verify in .explain(): BroadcastHashJoin).
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
+from kgx import schema
 from kgx.resources import PRED_REPUTATION, KnowledgeBase, local_df
 
 
@@ -33,67 +34,72 @@ def canonical_type(type_col):
     )
 
 
+def _first_wins(rows: list[tuple], key, order) -> list[tuple]:
+    """One row per `key(row)`: the row least in `order(row)` (then in the
+    whole row, so ties resolve the same way every run). The dims are
+    picked here, from the KB's driver-side rows, and handed to Spark as a
+    local relation: a first-wins window over them would cost every plan
+    that joins a dim a shuffle job. Keys are Python's `str.lower`, which
+    the differential oracle (tests/oracle.py) also uses for Spark's
+    `lower`."""
+    best: dict = {}
+    for r in rows:
+        k = key(r)
+        if k not in best or (order(r), r) < (order(best[k]), best[k]):
+            best[k] = r
+    return list(best.values())
+
+
 def gazetteer_dim(spark: SparkSession, kb: KnowledgeBase) -> DataFrame:
     """surface_lc → (entity_id, uri, name, type), one row per surface.
 
     Duplicate (surface) rows resolve first-id-wins: ORDER BY id ASC then
-    take first (DatabaseFacade.java:994 + Order.asc("id")), with id = the
-    deterministic hash — stable across runs and parallelism.
+    take first (DatabaseFacade.java:994 + Order.asc("id")). Our first-wins
+    order is (uri, name) lexicographic — a deterministic,
+    parallelism-independent stand-in for the reference's ORDER BY id ASC
+    (ids there are insertion order; ours must not depend on scheduling);
+    id is the deterministic content hash.
     """
-    g = (
-        kb.gazetteer_df(spark)
-        .withColumn("surface_lc", F.lower("surface"))
-        .withColumn("entity_type", canonical_type("entity_type"))
-        .withColumn("entity_id", _entity_id(F.col("entity_name"), F.col("entity_uri")))
+    rows = _first_wins(
+        kb.gazetteer, key=lambda r: r[3].lower(), order=lambda r: (r[0], r[1])
     )
-    # first-wins order: (uri, name) lexicographic — a deterministic,
-    # parallelism-independent stand-in for the reference's ORDER BY id ASC
-    # (ids there are insertion order; ours must not depend on scheduling)
-    w = Window.partitionBy("surface_lc").orderBy("entity_uri", "entity_name")
-    return (
-        g.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("surface_lc", "entity_id", "entity_uri", "entity_name", "entity_type")
+    return local_df(spark, rows, schema.GAZETTEER).select(
+        F.lower("surface").alias("surface_lc"),
+        _entity_id(F.col("entity_name"), F.col("entity_uri")).alias("entity_id"),
+        "entity_uri",
+        "entity_name",
+        canonical_type("entity_type").alias("entity_type"),
     )
 
 
 def feature_alias_dim(spark: SparkSession, kb: KnowledgeBase) -> DataFrame:
     """alias_lc → canonical predicate (GlobalParameters.java:147-159), plus
     the feature surface forms used in running text."""
-    alias = kb.feature_alias_df(spark).select(
-        F.lower("alias").alias("alias_lc"), F.col("canonical")
+    # deterministic first-wins (least canonical): a user-supplied KB may
+    # map one alias to two canonicals — the same scheduling-independence
+    # rule as gazetteer_dim/indicators_dim
+    rows = _first_wins(
+        kb.feature_alias + kb.feature_surfaces,
+        key=lambda r: r[0].lower(),
+        order=lambda r: r[1],
     )
-    surf = local_df(
-        spark, kb.feature_surfaces, "alias string, canonical string"
-    ).select(F.lower("alias").alias("alias_lc"), "canonical")
-    # deterministic first-wins (min canonical), not dropDuplicates: a
-    # user-supplied KB may map one alias to two canonicals, and
-    # dropDuplicates keeps an arbitrary row per run — the same
-    # scheduling-independence rule as gazetteer_dim/indicators_dim
-    w = Window.partitionBy("alias_lc").orderBy("canonical")
-    return (
-        alias.unionByName(surf)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("alias_lc", "canonical")
+    return local_df(spark, rows, schema.FEATURE_ALIAS).select(
+        F.lower("alias").alias("alias_lc"), "canonical"
     )
 
 
 def indicators_dim(spark: SparkSession, kb: KnowledgeBase) -> DataFrame:
-    d = kb.indicators_df(spark).withColumn("surface_lc", F.lower("surface"))
-    w = Window.partitionBy("surface_lc").orderBy("indicator_uri")
-    return (
-        d.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "surface_lc",
-            "indicator_uri",
-            "indicator_name",
-            "ind_type",
-            "correlation",
-            "object_class",
-            "feature_uri",
-        )
+    rows = _first_wins(
+        kb.indicators, key=lambda r: r[2].lower(), order=lambda r: r[0]
+    )
+    return local_df(spark, rows, schema.INDICATORS).select(
+        F.lower("surface").alias("surface_lc"),
+        "indicator_uri",
+        "indicator_name",
+        "ind_type",
+        "correlation",
+        "object_class",
+        "feature_uri",
     )
 
 

@@ -18,7 +18,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from kgx import assemble, cache, mentions
+from kgx import assemble, mentions
 
 
 def write_triples(triples: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -268,95 +268,86 @@ def phrase_fact_edges(facts: DataFrame, turns_with_mentions: DataFrame, kb) -> D
       * indicator   — the indicator phrase whose linked indicator_uri
                       equals the fact's, indirect facts only.
 
-    Shuffle shape: `kgx.job` passes the facts read back from their parquet
-    output, so no role branch reruns the linking joins that built them; a
-    file scan carries no partitioning, so each role join exchanges both
-    sides on (conv_id, turn_idx) unless AQE broadcasts the smaller one.
-    The mention side is the one persisted `ev` frame below; dims broadcast.
+    Shuffle shape: one equi-join of the facts with one frame of
+    role-tagged spans on (conv_id, turn_idx); the role conditions are the
+    join's residual filter. The span frame is built in-row: a turn's
+    feature span is the first element of `array_sort` over its Feature
+    mentions (least begin, ties broken by the rest of the span), and SO
+    and Indicator spans get their join key (linked entity name, indicator
+    uri) from one broadcast dim keyed on (kind, surface_lc). `kgx.job`
+    passes the facts read back from their parquet output, so the join
+    does not rerun the linking joins that built them.
     """
-    from pyspark.sql import Window
-
     from kgx import linking
 
     spark = facts.sparkSession
     gaz = linking.gazetteer_dim(spark, kb)
     ind_dim = linking.indicators_dim(spark, kb)
-
-    # persist the slim exploded-mention frame: all four role branches
-    # below derive from it, and without the cache each branch re-executes
-    # the Arrow mention-detection stage upstream (plan audit showed 9
-    # ArrowEvalPython nodes in the finalized plan; with the cache, 1).
-    ev = cache.persist(
+    span_key = F.broadcast(
+        gaz.select(
+            F.lit("SO").alias("kind"), "surface_lc",
+            F.lower("entity_name").alias("_key"),
+        ).unionByName(
+            ind_dim.select(
+                F.lit("Indicator").alias("kind"), "surface_lc",
+                F.col("indicator_uri").alias("_key"),
+            )
+        )
+    )
+    m = F.col("mentions")
+    first_feature = F.slice(
+        F.array_sort(F.filter(m, lambda x: x["kind"] == "Feature")), 1, 1
+    )
+    role = F.create_map(
+        F.lit("SO"), F.lit("subject"),
+        F.lit("OrientationTerm"), F.lit("orientation"),
+        F.lit("Feature"), F.lit("feature"),
+        F.lit("Indicator"), F.lit("indicator"),
+    )
+    ev = (
         mentions.resolved_mentions(turns_with_mentions)
-        .select("conv_id", "turn_idx", F.explode("mentions").alias("m"))
         .select(
-            "conv_id",
-            "turn_idx",
+            "conv_id", "turn_idx",
+            F.explode(
+                F.concat(F.filter(m, lambda x: x["kind"] != "Feature"), first_feature)
+            ).alias("m"),
+        )
+        .select(
+            "conv_id", "turn_idx",
             F.col("m.begin").alias("begin"),
             F.col("m.end").alias("end"),
             F.col("m.kind").alias("kind"),
-            F.col("m.surface").alias("surface"),
+            F.lower("m.surface").alias("surface_lc"),
         )
-    )
-    f = facts.select(
-        "conv_id", "turn_idx", "ts_day", "entity_name", "pred", "indicator_uri"
-    ).withColumn("_ename_lc", F.lower("entity_name"))
-    fkey = ["conv_id", "turn_idx"]
-    out_cols = [
-        "conv_id", "turn_idx",
-        F.col("entity_name").alias("subj_name"),
-        "pred", "indicator_uri", "begin", "end", "ts_day",
-    ]
-
-    so = (
-        ev.filter(F.col("kind") == "SO")
-        .withColumn("surface_lc", F.lower("surface"))
-        .join(F.broadcast(gaz), "surface_lc")
+        .join(span_key, ["kind", "surface_lc"], "left")
         .select(
-            "conv_id", "turn_idx", "begin", "end",
-            F.lower("entity_name").alias("_ename_lc"),
+            "conv_id", "turn_idx", "begin", "end", "_key",
+            role[F.col("kind")].alias("role"),
+        )
+        .alias("ev")
+    )
+    f = facts.alias("f")
+    r = F.col("ev.role")
+    on = (
+        (F.col("f.conv_id") == F.col("ev.conv_id"))
+        & (F.col("f.turn_idx") == F.col("ev.turn_idx"))
+        & (
+            (r == "orientation")
+            | ((r == "feature") & F.col("f.indicator_uri").isNull())
+            | ((r == "subject") & (F.col("ev._key") == F.lower("f.entity_name")))
+            | ((r == "indicator") & (F.col("ev._key") == F.col("f.indicator_uri")))
         )
     )
-    subject_edges = f.join(so, fkey + ["_ename_lc"]).select(
-        *out_cols, F.lit("subject").alias("role")
-    )
-
-    orient = ev.filter(F.col("kind") == "OrientationTerm").select(
-        "conv_id", "turn_idx", "begin", "end"
-    )
-    orientation_edges = f.join(orient, fkey).select(
-        *out_cols, F.lit("orientation").alias("role")
-    )
-
-    w = Window.partitionBy("conv_id", "turn_idx").orderBy("begin")
-    first_feat = (
-        ev.filter(F.col("kind") == "Feature")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("conv_id", "turn_idx", "begin", "end")
-    )
-    feature_edges = (
-        f.filter(F.col("indicator_uri").isNull())
-        .join(first_feat, fkey)
-        .select(*out_cols, F.lit("feature").alias("role"))
-    )
-
-    ind_ev = (
-        ev.filter(F.col("kind") == "Indicator")
-        .withColumn("surface_lc", F.lower("surface"))
-        .join(F.broadcast(ind_dim.select("surface_lc", "indicator_uri")), "surface_lc")
-        .select("conv_id", "turn_idx", "begin", "end", "indicator_uri")
-    )
-    indicator_edges = (
-        f.filter(F.col("indicator_uri").isNotNull())
-        .join(ind_ev, fkey + ["indicator_uri"])
-        .select(*out_cols, F.lit("indicator").alias("role"))
-    )
-
-    return (
-        subject_edges.unionByName(orientation_edges)
-        .unionByName(feature_edges)
-        .unionByName(indicator_edges)
+    return f.join(ev, on).select(
+        F.col("f.conv_id").alias("conv_id"),
+        F.col("f.turn_idx").alias("turn_idx"),
+        F.col("f.entity_name").alias("subj_name"),
+        F.col("f.pred").alias("pred"),
+        F.col("f.indicator_uri").alias("indicator_uri"),
+        F.col("ev.begin").alias("begin"),
+        F.col("ev.end").alias("end"),
+        F.col("f.ts_day").alias("ts_day"),
+        r.alias("role"),
     )
 
 
@@ -382,7 +373,9 @@ def document_meta(turns: DataFrame) -> DataFrame:
         *slim_cols,
         F.size(F.split("text", " ")).alias("w"),
         F.length("text").alias("c"),
-        F.col("ts"),
+        # the input model's TIMESTAMP (schema.TRANSCRIPTS): a pandas-written
+        # input reads as TIMESTAMP_NTZ, and doc_meta declares one type
+        F.col("ts").cast("timestamp").alias("ts"),
         src.alias("source"),
     )
     return assemble.resolve_duplicates(per_turn).groupBy("conv_id").agg(

@@ -16,6 +16,7 @@ from kgx import aggregate as agg_mod
 from kgx import (
     asof,
     assemble,
+    cache,
     dedup,
     graph,
     linking,
@@ -60,11 +61,16 @@ def _kg_run(spark: SparkSession, sf_dir: str):
 def _kg_memo(key, spark: SparkSession, turns: DataFrame):
     """Extract facts and turn_feats from `turns` and memoize both. They
     are session-lifetime caches by design, so they are persisted plainly,
-    never through kgx.cache: a caller's cache scope must not release them."""
+    never through kgx.cache: a caller's cache scope must not release them.
+    The facts are materialized inside a scope of their own, which releases
+    the linked-entity frame facts_from_turn_features cached to build them
+    (the already-persisted turn_feats it hands back untouched)."""
     kb = resources.driver_kb()
     tf = relations.turn_features(mentions.detect_mentions(turns, kb)).persist()
-    facts, tf = relations.facts_from_turn_features(tf, kb)
-    facts = facts.persist()
+    with cache.scope():
+        facts, tf = relations.facts_from_turn_features(tf, kb)
+        facts = facts.persist()
+        facts.count()
     _KG_CACHE[key] = (spark, facts, tf)
     return facts, tf
 _KG_COLS = [

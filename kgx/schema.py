@@ -12,8 +12,10 @@ tables with deterministic hash ids instead of identity columns.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
     DateType,
     DecimalType,
     IntegerType,
@@ -133,6 +135,50 @@ TRIPLES = StructType(
     ]
 )
 
+# the facts kgx.job writes (relations.sentence_facts) and reads back; the
+# ts_day partition column comes last, where a partitioned read puts it
+FACTS = StructType(
+    [
+        StructField("conv_id", StringType(), False),
+        StructField("turn_idx", IntegerType(), False),
+        StructField("entity_id", LongType(), True),
+        StructField("entity_uri", StringType(), True),
+        StructField("entity_name", StringType(), True),
+        StructField("entity_type", StringType(), True),
+        StructField("pred", StringType(), True),
+        StructField("subfeature", StringType(), True),
+        StructField("score_i", IntegerType(), True),
+        StructField("indicator_uri", StringType(), True),
+        StructField("ts_day", DateType(), True),
+    ]
+)
+
+# per-turn polarity counts, the input of the PosNegWordRatio fallback
+TURN_FEATS = StructType(
+    [
+        StructField("conv_id", StringType(), False),
+        StructField("turn_idx", IntegerType(), False),
+        StructField("pos_cnt", IntegerType(), True),
+        StructField("neg_cnt", IntegerType(), True),
+        StructField("has_so", BooleanType(), True),
+        StructField("ts_day", DateType(), True),
+    ]
+)
+
+# DOCUMENT_META_DATA analogue (materialize.document_meta)
+DOC_META = StructType(
+    [
+        StructField("conv_id", StringType(), False),
+        StructField("n_words", LongType(), True),
+        StructField("n_chars", LongType(), True),
+        StructField("n_turns", LongType(), True),
+        StructField("retrieval_ts", TimestampType(), True),
+        StructField("retrieval_date", DateType(), True),
+        StructField("source", StringType(), True),
+        StructField("website_id", LongType(), True),
+    ]
+)
+
 NODES = StructType(
     [
         StructField("entity_id", LongType(), False),
@@ -192,3 +238,18 @@ LINEAGE = StructType(
         StructField("ts", TimestampType(), False),
     ]
 )
+
+
+def conform(df: DataFrame, declared: StructType) -> DataFrame:
+    """`df` with its columns in `declared`'s order, after checking that its
+    column names and types equal the declared ones (nullability aside). A
+    parquet read with a declared schema fills a column the files lack with
+    NULL and raises nothing, so a frame that drifted from its declaration
+    must fail before it is written, not when a reader sees the NULLs."""
+    got = [(f.name, f.dataType.simpleString()) for f in df.schema]
+    want = [(f.name, f.dataType.simpleString()) for f in declared]
+    if sorted(got) != sorted(want):
+        raise ValueError(
+            f"frame schema {sorted(got)} differs from its declaration {sorted(want)}"
+        )
+    return df.select(*declared.fieldNames())

@@ -138,15 +138,45 @@ def test_merge_upsert_delete_then_insert_idempotent(spark, tmp_path):
 # KB snapshot id in lineage
 # ---------------------------------------------------------------------------
 
+# Spark jobs of one run_pipeline over the 4-conversation input below, as
+# measured when the stage writes became concurrent and the schema-inference,
+# count and dim-shuffle jobs were removed (the run made 106 jobs before)
+RUN_JOB_BUDGET = 77
+
+
 def test_kb_version_stamped_into_lineage(spark, tmp_path):
-    from kgx import job, synth
+    from kgx import job, schema, synth
 
     pdf = synth.make_transcripts(n_convs=4, turns_per_conv=3, seed=11, oversize_every=0)
     inp = str(tmp_path / "in.parquet")
     pdf.to_parquet(inp, index=False)
     out = str(tmp_path / "kg")
     kb = resources.default_kb()
-    job.run_pipeline(spark, spark.read.parquet(inp), out, kb=kb)
+    sc = spark.sparkContext
+    # the job budget: every Spark job of the run, the ones its pool
+    # threads start included (they inherit the caller's job group)
+    sc.setJobGroup("kgx-run-budget", "run_pipeline")
+    try:
+        job.run_pipeline(spark, spark.read.parquet(inp), out, kb=kb)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("kgx-run-budget")) <= RUN_JOB_BUDGET
+
+    # every output the job reads back or counts has the schema it declares
+    # (a read with a declared schema would fill a missing column with
+    # NULL), and a read with it launches no schema-inference job
+    for name, declared in job.SCHEMAS.items():
+        inferred = spark.read.parquet(f"{out}/{name}").schema
+        assert [(f.name, f.dataType) for f in inferred] == [
+            (f.name, f.dataType) for f in declared
+        ], name
+    sc.setJobGroup("kgx-declared-read", "declared read")
+    try:
+        spark.read.schema(schema.FACTS).parquet(f"{out}/facts").schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("kgx-declared-read") == []
+
     lin = spark.read.parquet(f"{out}/lineage")
     vers = {r["kb_version"] for r in lin.select("kb_version").collect()}
     assert vers == {kb.version()}
@@ -183,6 +213,68 @@ def test_kb_version_stamped_into_lineage(spark, tmp_path):
     assert len(analytics) == 1
     assert analytics[0]["partition_id"] is None
     assert analytics[0]["rows_out"] is None
+
+
+def test_gate_drops_invalid_conv_and_pool_write_failure_fails_stage(
+    spark, tmp_path, monkeypatch
+):
+    """One run: a null-pred fact makes the validity gate drop its whole
+    conversation from triples and entity_degrees, counted in the triples
+    marker; then a write that fails inside the analytics pool reaches the
+    caller, and analytics leaves neither its lineage nor a marker."""
+    import glob
+    import json
+
+    import pytest
+
+    from kgx import job, lineage, relations, synth
+
+    pdf = synth.make_transcripts(n_convs=4, turns_per_conv=3, seed=11, oversize_every=0)
+    inp = str(tmp_path / "in.parquet")
+    pdf.to_parquet(inp, index=False)
+    out = str(tmp_path / "kg")
+
+    sentence_facts = relations.sentence_facts
+
+    def with_invalid_fact(spans, kb):
+        facts, tf = sentence_facts(spans, kb)
+        bad = (
+            facts.orderBy("conv_id", "turn_idx", "entity_id")
+            .limit(1)
+            .withColumn("pred", F.lit(None).cast("string"))
+        )
+        return facts.unionByName(bad), tf
+
+    def failing_url_dim(doc_meta, *args, **kwargs):
+        return doc_meta.select(
+            "conv_id",
+            F.raise_error(F.lit("url_dim write failed")).cast("string").alias("x"),
+        )
+
+    monkeypatch.setattr(relations, "sentence_facts", with_invalid_fact)
+    monkeypatch.setattr(materialize, "url_dim", failing_url_dim)
+    with pytest.raises(Exception, match="url_dim write failed"):
+        job.run_pipeline(spark, spark.read.parquet(inp), out)
+
+    facts = spark.read.parquet(f"{out}/facts")
+    (victim,) = {r["conv_id"] for r in facts.filter(F.col("pred").isNull()).collect()}
+    kept = facts.filter(F.col("conv_id") != victim)
+    assert kept.count() > 0
+    triples = spark.read.parquet(f"{out}/triples")
+    assert triples.filter(F.col("conv_id") == victim).count() == 0
+    assert triples.count() > 0
+    # entity_degrees has no conv_id: its fact count is that of the kept
+    # conversations exactly
+    degrees = spark.read.parquet(f"{out}/entity_degrees")
+    assert degrees.agg(F.sum("n_facts")).collect()[0][0] == kept.count()
+    with open(f"{out}/triples/{lineage.MARKER}") as f:
+        assert json.load(f)["n_invalid_convs"] == 1
+
+    stages = {r["stage"] for r in spark.read.parquet(f"{out}/lineage").collect()}
+    assert stages == {"extract", "triples", "nodes"}
+    assert len(glob.glob(f"{out}/lineage/*.parquet")) == 3
+    for o in job.STAGES["analytics"]:
+        assert glob.glob(f"{out}/{o}/{lineage.MARKER}") == []
 
 
 # ---------------------------------------------------------------------------

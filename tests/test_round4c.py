@@ -433,6 +433,20 @@ def test_multiturn_document_triples_aggregate_across_turns(spark):
     assert frac > 0
 
 
+def test_kg_memo_caches_only_its_two_frames(spark):
+    """Outside any cache scope the kg memo leaves exactly its own two
+    frames (facts, turn_feats) cached: the linked-entity frame the facts
+    were built from is released once they are materialized."""
+    from kgx import queries as q
+
+    sc = spark.sparkContext
+    q._KG_CACHE.pop((id(spark), SF_DIR), None)
+    before = set(sc._jsc.getPersistentRDDs().keySet())
+    q.kg_sentence_triples(spark, SF_DIR).count()
+    after = set(sc._jsc.getPersistentRDDs().keySet())
+    assert len(after - before) == 2
+
+
 # ---------------------------------------------------------------------------
 # streaming SCD2
 # ---------------------------------------------------------------------------
